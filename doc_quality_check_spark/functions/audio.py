@@ -226,19 +226,19 @@ _IMA_STEP_TABLE = np.array([
 ], dtype=np.int64)
 
 
-def _ima_nibble_decode(n, pred, index):
-    step = int(_IMA_STEP_TABLE[index])
-    diff = step >> 3
-    if n & 1:
-        diff += step >> 2
-    if n & 2:
-        diff += step >> 1
-    if n & 4:
-        diff += step
-    pred = pred - diff if n & 8 else pred + diff
-    pred = max(-32768, min(32767, pred))
-    index = max(0, min(88, index + int(_IMA_INDEX_TABLE[n])))
-    return pred, index
+def _ima_tables():
+    """(signed predictor delta, next step index) for every (step index,
+    nibble): the IMA decoder's whole per-nibble arithmetic as two lookups."""
+    step = _IMA_STEP_TABLE[:, None]
+    n = np.arange(16)
+    diff = ((step >> 3) + np.where(n & 1, step >> 2, 0)
+            + np.where(n & 2, step >> 1, 0) + np.where(n & 4, step, 0))
+    delta = np.where(n & 8, -diff, diff)
+    nxt = np.clip(np.arange(89)[:, None] + _IMA_INDEX_TABLE, 0, 88)
+    return delta, nxt
+
+
+_IMA_DELTA, _IMA_NEXT = _ima_tables()
 
 
 def _ima_nibble_encode(sample, pred, index):
@@ -266,6 +266,7 @@ def encode_wav_ima_adpcm(pcm: np.ndarray, sr_hz: int) -> bytes:
     spb = (_IMA_BLOCK_ALIGN - 4) * 2 + 1  # samples per block incl. header
     out = bytearray()
     index = 0
+    delta, nxt = _IMA_DELTA.tolist(), _IMA_NEXT.tolist()
     for b0 in range(0, len(x), spb):
         block = x[b0 : b0 + spb]
         pred = int(block[0])
@@ -273,7 +274,8 @@ def encode_wav_ima_adpcm(pcm: np.ndarray, sr_hz: int) -> bytes:
         nibbles = []
         for s in block[1:]:
             n = _ima_nibble_encode(int(s), pred, index)
-            pred, index = _ima_nibble_decode(n, pred, index)
+            pred = max(-32768, min(32767, pred + delta[index][n]))
+            index = nxt[index][n]
             nibbles.append(n)
         nibbles += [0] * (-len(nibbles) % 2)
         for lo, hi in zip(nibbles[0::2], nibbles[1::2]):
@@ -295,21 +297,55 @@ def encode_wav_ima_adpcm(pcm: np.ndarray, sr_hz: int) -> bytes:
     return bytes(hdr) + bytes(out)
 
 
+def _clamp_scan(a: np.ndarray, lo: int, hi: int):
+    """Running composition, along axis 1, of the maps
+    ``x -> min(hi, max(lo, x + a[:, t]))``: returns (A, L, H) with the state
+    after step t, from start x0, equal to ``min(H[:, t], max(L[:, t],
+    x0 + A[:, t]))``. Such clamp maps are closed under composition, so a
+    Hillis-Steele scan builds them in log2(steps) vector passes."""
+    A = a.astype(np.int32)
+    L = np.full(A.shape, lo, dtype=np.int32)
+    H = np.full(A.shape, hi, dtype=np.int32)
+    d = 1
+    while d < A.shape[1]:
+        # apply the map ending d steps earlier first, then this one
+        A2, L2, H2 = A[:, d:], L[:, d:], H[:, d:]
+        new_lo = np.minimum(np.maximum(L[:, :-d] + A2, L2), H2)
+        new_hi = np.minimum(np.maximum(H[:, :-d] + A2, L2), H2)
+        A[:, d:] = A[:, :-d] + A2
+        L[:, d:], H[:, d:] = new_lo, new_hi
+        d *= 2
+    return A, L, H
+
+
 def _decode_ima_adpcm(data: bytes, block_align: int, n_samples: int | None):
-    spb = (block_align - 4) * 2 + 1
-    out = []
-    for b0 in range(0, len(data), block_align):
-        block = data[b0 : b0 + block_align]
-        if len(block) < 4:
-            break
-        pred, index, _r = struct.unpack_from("<hBB", block, 0)
-        index = max(0, min(88, index))
-        out.append(pred)
-        for byte in block[4:]:
-            for n in (byte & 0x0F, byte >> 4):
-                pred, index = _ima_nibble_decode(n, pred, index)
-                out.append(pred)
-    pcm = np.array(out, dtype=np.float32) / 32767.0
+    """Mono IMA ADPCM blocks → float32 PCM, with no per-nibble loop. In a
+    block the step index follows a clamped running sum of index
+    adjustments, and the predictor a clamped running sum of the deltas
+    looked up by (step index, nibble); each is one :func:`_clamp_scan`
+    over all blocks at once. A short last block decodes as far as it goes;
+    a trailing fragment shorter than the 4-byte block header is ignored."""
+    raw = np.frombuffer(data, dtype=np.uint8)
+    nblk, tail = divmod(len(raw), block_align)
+    if tail >= 4:  # zero-pad the short block; its extra samples are cut
+        raw = np.concatenate([raw, np.zeros(block_align - tail, np.uint8)])
+        nblk += 1
+    blocks = raw[: nblk * block_align].reshape(nblk, block_align)
+    pred0 = blocks[:, :2].copy().view("<i2")[:, 0].astype(np.int32)
+    index0 = np.minimum(blocks[:, 2], 88).astype(np.int32)
+    nib = np.empty((nblk, 2 * (block_align - 4)), dtype=np.intp)
+    nib[:, 0::2] = blocks[:, 4:] & 0x0F  # low nibble first
+    nib[:, 1::2] = blocks[:, 4:] >> 4
+    index = np.empty(nib.shape, dtype=np.intp)
+    index[:, 0] = index0
+    A, L, H = _clamp_scan(_IMA_INDEX_TABLE[nib[:, :-1]], 0, 88)
+    index[:, 1:] = np.minimum(H, np.maximum(L, index0[:, None] + A))
+    A, L, H = _clamp_scan(_IMA_DELTA[index, nib], -32768, 32767)
+    pred = np.minimum(H, np.maximum(L, pred0[:, None] + A))
+    out = np.concatenate([pred0[:, None], pred], axis=1).ravel()
+    if tail >= 4:
+        out = out[: len(out) - 2 * (block_align - tail)]
+    pcm = out.astype(np.float32) / 32767.0
     if n_samples is not None:
         pcm = pcm[:n_samples]
     return pcm
@@ -817,12 +853,14 @@ def with_audio_metrics(df, payload_col: str = "bytes", codec_col: str = "codec",
     single shared JVM the Arrow binary transfer degrades past ~12 concurrent
     writer threads (measured 2.3s vs 11s for the same 4GB stage), while on a
     real cluster each executor's slot count already provides this bound —
-    unset the conf there."""
+    unset the conf there. A value that is not an integer raises
+    ValueError."""
+    key = "spark.doc_quality_check.decode.maxTasks"
+    raw = df.sparkSession.conf.get(key, "0")
     try:
-        cap = int(df.sparkSession.conf.get(
-            "spark.doc_quality_check.decode.maxTasks", "0"))
-    except Exception:
-        cap = 0
+        cap = int(raw)
+    except ValueError:
+        raise ValueError(f"{key} must be an integer, got {raw!r}") from None
     if cap and df.rdd.getNumPartitions() > cap:
         df = df.coalesce(cap)
     udf = audio_metrics_fast_udf if fast else audio_metrics_udf

@@ -11,8 +11,9 @@ format specification (xiph.org / RFC 9639):
   VERBATIM / FIXED(0-4) / LPC(1-32) subframes, wasted bits, Rice and
   Rice2 residual partitions with raw-bits escapes, and every stereo
   decorrelation mode (independent, left/side, right/side, mid/side —
-  side channels carry bps+1 bits). Returns (sr, float32 mono-mixed PCM
-  in [-1, 1]) — the same contract as audio._parse_wav.
+  side channels carry bps+1 bits), with the CRC-16 of every frame
+  verified. Returns (sr, float32 mono-mixed PCM in [-1, 1]) — the same
+  contract as audio._parse_wav.
 - :func:`encode_flac`: a real, spec-conformant encoder used as the
   deterministic fixture generator (mono or independent-stereo, 16-bit,
   fixed blocking): per frame it picks the cheapest FIXED predictor order
@@ -20,33 +21,34 @@ format specification (xiph.org / RFC 9639):
   header and CRC-16 frame checksums — any conformant FLAC decoder can
   play its output.
 
+The decoder is vectorized: no Python loop runs per bit. A Rice partition
+decodes whole from one unpacked window of the stream (its stop bits are
+found by pointer doubling over the window's set bits, its remainders
+gathered from byte windows); VERBATIM and escape samples are strided field
+gathers; FIXED restore is cumulative sums; CRC-16 is a table lookup per
+byte. Only the LPC recursion stays per sample, over Python ints.
+
 Lossless gate: decode(encode(pcm16)) reproduces the input EXACTLY
 (tests/test_audio_udfs.py), the strongest possible roundtrip invariant —
-plus CRC self-validation on every decoded frame.
+plus CRC self-validation on every decoded frame. The original per-bit
+decoder is the test oracle (tests/scalar_decoders.py): this one returns
+exactly what it returns and raises ValueError where it raises; it also
+rejects LPC samples beyond +-2^62, where the oracle's int64 recursion
+could wrap or raise OverflowError.
 """
 
 from __future__ import annotations
 
+import operator
 import struct
 
 import numpy as np
 
 FLAC_MAGIC = b"fLaC"
 
-_FIXED_COEFS = {
-    0: [],
-    1: [1],
-    2: [2, -1],
-    3: [3, -3, 1],
-    4: [4, -6, 4, -1],
-}
-
-# sample-rate codes (frame header, table from the spec)
-_SR_CODES = {
-    1: 88200, 2: 176400, 3: 192000, 4: 8000, 5: 16000, 6: 22050,
-    7: 24000, 8: 32000, 9: 44100, 10: 48000, 11: 96000,
-}
 _BPS_CODES = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}
+_UNARY_MAX = 1_000_000  # longest accepted unary run (bounds hostile input)
+_LPC_LIMIT = 1 << 62  # LPC samples stay strictly inside +-2^62
 
 
 def _crc8(data: bytes) -> int:
@@ -58,58 +60,184 @@ def _crc8(data: bytes) -> int:
     return crc
 
 
-def _crc16(data: bytes) -> int:
+# CRC-16 (x^16 + x^15 + x^2 + 1, MSB first, zero init) is linear: a byte v
+# followed by z more bytes contributes v(x) * x^(8z + 16) mod the polynomial.
+# Bytes are taken in spans of _CRC16_SPAN; a span's CRC is the XOR of one
+# table lookup per byte, and spans fold together by multiplying the running
+# CRC by x^(8 * span). The table has a fixed size whatever the input length.
+_CRC16_SPAN = 256
+
+
+def _crc16_table() -> np.ndarray:
+    """``t[j, v]``: the CRC-16 of byte ``v`` followed by ``span - 1 - j``
+    zero bytes."""
+    one = np.arange(256, dtype=np.int64) << 8
+    for _ in range(8):
+        one = np.where(one & 0x8000, (one << 1) ^ 0x8005, one << 1) & 0xFFFF
+    t = np.empty((_CRC16_SPAN, 256), dtype=np.uint16)
+    row = one
+    for j in range(_CRC16_SPAN - 1, -1, -1):
+        t[j] = row
+        row = ((row & 0xFF) << 8) ^ one[row >> 8]  # times x^8
+    return t
+
+
+_CRC16_TABLE = _crc16_table()
+_CRC16_COLS = np.arange(_CRC16_SPAN)
+# c * x^(8 * span) = hi(c) * x^(8 * span + 8) + lo(c) * x^(8 * span)
+_CRC16_FOLD_HI = _CRC16_TABLE[0].tolist()
+_CRC16_FOLD_LO = _CRC16_TABLE[1].tolist()
+
+
+def _crc16(data) -> int:
+    a = np.frombuffer(data, dtype=np.uint8)
+    pad = -len(a) % _CRC16_SPAN
+    if pad:  # leading zero bytes leave a zero-initialised CRC unchanged
+        a = np.concatenate([np.zeros(pad, dtype=np.uint8), a])
+    spans = np.bitwise_xor.reduce(
+        _CRC16_TABLE[_CRC16_COLS, a.reshape(-1, _CRC16_SPAN)], axis=1
+    )
     crc = 0
-    for b in data:
-        crc ^= b << 8
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x8005) & 0xFFFF if crc & 0x8000 \
-                else (crc << 1) & 0xFFFF
+    for s in spans.tolist():
+        crc = _CRC16_FOLD_HI[crc >> 8] ^ _CRC16_FOLD_LO[crc & 0xFF] ^ s
     return crc
 
 
-class _Bits:
-    """MSB-first bit reader with byte-position tracking (for CRC spans)."""
+class _Stream:
+    """A FLAC stream addressed by absolute bit position. Scalar fields come
+    from byte slices and vectors of fields from byte gathers; unary codes are
+    found among the set bits of an unpacked window of the stream."""
 
-    def __init__(self, buf: bytes, pos: int):
+    def __init__(self, buf: bytes):
         self.buf = buf
-        self.pos = pos  # next unread BYTE (bits are drawn from cur)
-        self.cur = 0
-        self.n = 0
+        self.nbits = 8 * len(buf)
+        self.u8 = np.concatenate(
+            [np.frombuffer(buf, dtype=np.uint8), np.zeros(8, dtype=np.uint8)]
+        )
 
-    def read(self, nbits: int) -> int:
-        while self.n < nbits:
-            if self.pos >= len(self.buf):
+    def need(self, end: int) -> None:
+        if end > self.nbits:
+            raise ValueError("FLAC bitstream truncated")
+
+    def read(self, pos: int, n: int) -> int:
+        end = pos + n
+        self.need(end)
+        v = int.from_bytes(self.buf[pos >> 3 : (end + 7) >> 3], "big")
+        return (v >> (-end & 7)) & ((1 << n) - 1)
+
+    def fields(self, pos: np.ndarray, n: int) -> np.ndarray:
+        """Unsigned ``n``-bit fields (1 <= n <= 33) at bit positions
+        ``pos``, which the caller has bounds-checked."""
+        b = pos >> 3
+        nbytes = (n + 14) >> 3  # bytes an n-bit field spans at any offset
+        w = self.u8[b].astype(np.int64)
+        for i in range(1, nbytes):
+            w = (w << 8) | self.u8[b + i]
+        return (w >> (8 * nbytes - n - (pos & 7))) & ((1 << n) - 1)
+
+    def samples(self, pos: int, count: int, n: int):
+        """``count`` packed two's-complement ``n``-bit samples at ``pos``
+        → (int64 array, end position)."""
+        if count == 0:
+            return np.zeros(0, dtype=np.int64), pos
+        if n < 1:
+            raise ValueError("FLAC sample width below one bit")
+        end = pos + count * n
+        self.need(end)
+        v = self.fields(pos + n * np.arange(count, dtype=np.int64), n)
+        return v - ((v >> (n - 1)) << n), end
+
+    def stops(self, pos: int, n: int, k: int):
+        """Stop bits of ``n`` codes at ``pos``, each a unary quotient (zeros
+        ended by a set stop bit) and a ``k``-bit remainder → (stop
+        positions, quotients). Codes are decoded from an unpacked window of
+        the stream; when the window ends first, decoding resumes after the
+        last code it held."""
+        pieces = []
+        start, left = pos, n
+        span = n * (k + 3) + 64
+        while left:
+            hi = min(start + span, self.nbits)
+            lo = start >> 3
+            bits = np.unpackbits(self.u8[lo : (hi + 7) >> 3])
+            bits = bits[start - 8 * lo : hi - 8 * lo]
+            # a code holds its stop bit and at most k set remainder bits, so
+            # the stop bits lie among the next left * (k + 1) set bits
+            cand = np.flatnonzero(bits.view(bool))[: left * (k + 1)]
+            if k == 0:
+                got = cand[:left]
+            else:
+                # candidate j's code continues at candidate rank[cand[j] + k]
+                # (set bits in bits[:cand[j] + k + 1]); m marks "past the
+                # window"
+                m = len(cand)
+                whole = int(np.searchsorted(cand, len(bits) - k))
+                jump = np.empty(m + 1, dtype=np.int64)
+                jump[whole:] = m
+                rank = np.cumsum(bits, dtype=np.int32)
+                np.minimum(rank[cand[:whole] + k], m, out=jump[:whole])
+                chain = _walk(jump, left)
+                got = cand[chain[: int(np.searchsorted(chain, m))]]
+            if len(got):
+                pieces.append(got + start)
+                start = int(pieces[-1][-1]) + k + 1
+                left -= len(got)
+                span = left * (k + 3) + 64
+            elif hi == self.nbits:
                 raise ValueError("FLAC bitstream truncated")
-            self.cur = (self.cur << 8) | self.buf[self.pos]
-            self.pos += 1
-            self.n += 8
-        self.n -= nbits
-        v = (self.cur >> self.n) & ((1 << nbits) - 1)
-        self.cur &= (1 << self.n) - 1
-        return v
+            else:  # no whole code in the window: a long unary run
+                span *= 2
+        stops = pieces[0] if len(pieces) == 1 else np.concatenate(pieces)
+        q = np.diff(stops, prepend=pos - k - 1) - (k + 1)
+        if int(q.max()) > _UNARY_MAX:
+            raise ValueError("FLAC unary run overflow")
+        self.need(start)
+        return stops, q
 
-    def sread(self, nbits: int) -> int:
-        v = self.read(nbits)
-        return v - (1 << nbits) if v >= (1 << (nbits - 1)) else v
-
-    def unary(self) -> int:
-        q = 0
-        while self.read(1) == 0:
-            q += 1
-            if q > 1_000_000:
-                raise ValueError("FLAC unary run overflow")
-        return q
-
-    def align(self) -> None:
-        self.n = 0
-        self.cur = 0
+    def rice(self, pos: int, n: int, k: int):
+        """``n`` Rice codes with parameter ``k`` at ``pos``, zigzag-decoded
+        → (int64 array, end position)."""
+        if n == 0:
+            return np.zeros(0, dtype=np.int64), pos
+        stops, q = self.stops(pos, n, k)
+        v = q << k
+        if k:
+            v |= self.fields(stops + 1, k)
+        return (v >> 1) ^ -(v & 1), int(stops[-1]) + 1 + k
 
 
-def _read_utf8_number(bits: _Bits) -> int:
-    b0 = bits.read(8)
+def _walk(jump: np.ndarray, n: int) -> np.ndarray:
+    """The first ``n`` nodes of the path 0, jump[0], jump[jump[0]], ...
+    ``jump`` is squared until it steps ``span`` (about sqrt(n) / 4) nodes; a
+    short walk finds every span-th node, and the kept powers fill in the
+    nodes between them, all rows at once."""
+    powers = [jump]
+    span = 1
+    while 16 * span * span < n:
+        powers.append(powers[-1][powers[-1]])
+        span *= 2
+    big = powers.pop()
+    node = 0
+    anchors = [0]
+    for _ in range((n - 1) // span):
+        node = int(big[node])
+        anchors.append(node)
+    path = np.empty((len(anchors), span), dtype=np.int64)
+    path[:, 0] = anchors
+    have = 1
+    for step in powers:  # step moves `have` nodes
+        path[:, have : 2 * have] = step[path[:, :have]]
+        have *= 2
+    return path.ravel()[:n]
+
+
+def _skip_utf8_number(buf: bytes, p: int) -> int:
+    """Position after the UTF-8-coded frame/sample number at byte ``p``."""
+    if p >= len(buf):
+        raise ValueError("FLAC bitstream truncated")
+    b0 = buf[p]
     if b0 < 0x80:
-        return b0
+        return p + 1
     nbytes = 0
     mask = 0x40
     while b0 & mask:
@@ -117,99 +245,119 @@ def _read_utf8_number(bits: _Bits) -> int:
         mask >>= 1
     if nbytes < 1 or nbytes > 6:
         raise ValueError("bad FLAC UTF-8 coded number")
-    v = b0 & (mask - 1)
-    for _ in range(nbytes):
-        b = bits.read(8)
+    for b in buf[p + 1 : p + 1 + nbytes]:
         if (b & 0xC0) != 0x80:
             raise ValueError("bad FLAC UTF-8 continuation")
-        v = (v << 6) | (b & 0x3F)
-    return v
+    if p + 1 + nbytes > len(buf):
+        raise ValueError("FLAC bitstream truncated")
+    return p + 1 + nbytes
 
 
-def _read_residual(bits: _Bits, blocksize: int, order: int) -> np.ndarray:
-    method = bits.read(2)
+def _residual(s: _Stream, pos: int, blocksize: int, order: int):
+    method = s.read(pos, 2)
     if method > 1:
         raise ValueError("reserved FLAC residual coding method")
     pbits = 4 if method == 0 else 5
     escape = (1 << pbits) - 1
-    porder = bits.read(4)
+    porder = s.read(pos + 2, 4)
+    pos += 6
     nparts = 1 << porder
     if blocksize % nparts:
         raise ValueError("FLAC partition order does not divide block size")
-    out = np.empty(blocksize - order, dtype=np.int64)
-    w = 0
+    parts = []
     for p in range(nparts):
         n = (blocksize >> porder) - (order if p == 0 else 0)
         if n < 0:
             raise ValueError("FLAC predictor order exceeds first partition")
-        k = bits.read(pbits)
+        k = s.read(pos, pbits)
+        pos += pbits
         if k == escape:
-            raw = bits.read(5)
-            for i in range(n):
-                out[w + i] = bits.sread(raw) if raw else 0
+            raw = s.read(pos, 5)
+            pos += 5
+            if raw:
+                vals, pos = s.samples(pos, n, raw)
+            else:
+                vals = np.zeros(n, dtype=np.int64)
         else:
-            for i in range(n):
-                q = bits.unary()
-                v = (q << k) | (bits.read(k) if k else 0)
-                out[w + i] = (v >> 1) ^ -(v & 1)  # zigzag
-        w += n
-    return out
+            vals, pos = s.rice(pos, n, k)
+        parts.append(vals)
+    return np.concatenate(parts), pos
 
 
-def _decode_subframe(bits: _Bits, blocksize: int, bps: int) -> np.ndarray:
-    if bits.read(1):
+def _fixed_restore(warm: np.ndarray, resid: np.ndarray) -> np.ndarray:
+    """Samples after the warm-up of a FIXED subframe. The order-p residual is
+    the p-th backward difference, so restoring it is p cumulative sums, each
+    started from the matching difference of the warm-up samples (int64
+    wrap-around, like the recursion it replaces)."""
+    x = resid
+    for d in range(len(warm) - 1, -1, -1):
+        x = np.cumsum(x)
+        x += np.diff(warm, d)[-1]
+    return x
+
+
+def _lpc_restore(warm: list, coefs: list, shift: int,
+                 resid: np.ndarray) -> np.ndarray:
+    """The LPC recursion over Python ints. A sample reaching +-2^62 raises:
+    below that bound int64 arithmetic is exact, so the result matches an
+    int64 recursion bit for bit."""
+    out = warm
+    order = len(coefs)
+    rev = coefs[::-1]
+    for i, r in enumerate(resid.tolist()):
+        v = r + (sum(map(operator.mul, rev, out[i : i + order])) >> shift)
+        if not -_LPC_LIMIT < v < _LPC_LIMIT:
+            raise ValueError("FLAC LPC sample overflow")
+        out.append(v)
+    return np.array(out, dtype=np.int64)
+
+
+def _decode_subframe(s: _Stream, pos: int, blocksize: int, bps: int):
+    """One subframe at bit ``pos`` → (int64 samples, end position)."""
+    head = s.read(pos, 8)
+    pos += 8
+    if head & 0x80:
         raise ValueError("FLAC subframe padding bit set")
-    t = bits.read(6)
+    t = (head >> 1) & 0x3F
     wasted = 0
-    if bits.read(1):
-        wasted = 1 + bits.unary()
+    if head & 1:
+        wasted = 1 + int(s.stops(pos, 1, 0)[1][0])  # unary-coded count
+        pos += wasted
         bps -= wasted
     if t == 0:  # CONSTANT
-        out = np.full(blocksize, bits.sread(bps), dtype=np.int64)
+        v, pos = s.samples(pos, 1, bps)
+        out = np.full(blocksize, v[0], dtype=np.int64)
     elif t == 1:  # VERBATIM
-        out = np.array([bits.sread(bps) for _ in range(blocksize)],
-                       dtype=np.int64)
+        out, pos = s.samples(pos, blocksize, bps)
     elif 8 <= t <= 12:  # FIXED, order t-8
-        order = t - 8
-        warm = [bits.sread(bps) for _ in range(order)]
-        resid = _read_residual(bits, blocksize, order)
-        out = np.empty(blocksize, dtype=np.int64)
-        out[:order] = warm
-        coefs = _FIXED_COEFS[order]
-        for i in range(order, blocksize):
-            pred = 0
-            for j, c in enumerate(coefs):
-                pred += c * out[i - 1 - j]
-            out[i] = resid[i - order] + pred
+        warm, pos = s.samples(pos, t - 8, bps)
+        resid, pos = _residual(s, pos, blocksize, t - 8)
+        out = np.concatenate([warm, _fixed_restore(warm, resid)])
     elif t >= 32:  # LPC, order t-31
         order = t - 31
-        warm = [bits.sread(bps) for _ in range(order)]
-        prec = bits.read(4) + 1
+        warm, pos = s.samples(pos, order, bps)
+        prec = s.read(pos, 4) + 1
         if prec == 16:
             raise ValueError("invalid FLAC LPC precision")
-        shift = bits.sread(5)
-        if shift < 0:
+        shift = s.read(pos + 4, 5)
+        if shift >= 16:  # a negative 5-bit two's-complement shift
             raise ValueError("negative FLAC LPC shift")
-        coefs = [bits.sread(prec) for _ in range(order)]
-        resid = _read_residual(bits, blocksize, order)
-        out = np.empty(blocksize, dtype=np.int64)
-        out[:order] = warm
-        for i in range(order, blocksize):
-            pred = 0
-            for j in range(order):
-                pred += coefs[j] * int(out[i - 1 - j])
-            out[i] = resid[i - order] + (pred >> shift)
+        coefs, pos = s.samples(pos + 9, order, prec)
+        resid, pos = _residual(s, pos, blocksize, order)
+        out = _lpc_restore(warm.tolist(), coefs.tolist(), shift, resid)
     else:
         raise ValueError(f"reserved FLAC subframe type {t}")
     if wasted:
         out <<= wasted
-    return out
+    return out, pos
 
 
 def decode_flac(buf: bytes):
     """Native FLAC bytes → (sample_rate, float32 mono PCM in [-1, 1]).
     Multi-channel audio mixes to mono (the engine's metrics contract,
-    same as audio._parse_wav). Raises ValueError on malformed input."""
+    same as audio._parse_wav). Raises ValueError on malformed input: bad
+    sync, CRC-8 or CRC-16, reserved codes, partition checks, unary runs
+    over 10^6 bits, and truncation."""
     if buf[:4] != FLAC_MAGIC:
         raise ValueError("not a FLAC stream")
     pos = 4
@@ -234,6 +382,7 @@ def decode_flac(buf: bytes):
     if sr is None or not sr:
         raise ValueError("FLAC missing STREAMINFO")
 
+    s = _Stream(buf)
     chans: list[list[np.ndarray]] = [[] for _ in range(channels)]
     ndecoded = 0
     while pos + 2 <= len(buf) and (total == 0 or ndecoded < total):
@@ -241,67 +390,71 @@ def decode_flac(buf: bytes):
         if (sync >> 2) != 0x3FFE:
             raise ValueError("FLAC frame sync lost")
         frame_start = pos
-        bits = _Bits(buf, pos + 2)
-        bs_code = bits.read(4)
-        sr_code = bits.read(4)
-        ch_code = bits.read(4)
-        bps_code = bits.read(3)
-        bits.read(1)  # reserved
-        _read_utf8_number(bits)
+        if pos + 4 > len(buf):
+            raise ValueError("FLAC bitstream truncated")
+        bs_code, sr_code = buf[pos + 2] >> 4, buf[pos + 2] & 0xF
+        ch_code, bps_code = buf[pos + 3] >> 4, (buf[pos + 3] >> 1) & 0x7
+        p = _skip_utf8_number(buf, pos + 4)
         if bs_code == 0:
             raise ValueError("reserved FLAC block size code")
         elif bs_code == 1:
             blocksize = 192
         elif bs_code <= 5:
             blocksize = 576 << (bs_code - 2)
-        elif bs_code == 6:
-            blocksize = bits.read(8) + 1
-        elif bs_code == 7:
-            blocksize = bits.read(16) + 1
+        elif bs_code <= 7:  # 8- or 16-bit (block size - 1) follows
+            n = bs_code - 5
+            blocksize = int.from_bytes(buf[p : p + n], "big") + 1
+            p += n
         else:
             blocksize = 256 << (bs_code - 8)
         if sr_code == 12:
-            bits.read(8)
+            p += 1
         elif sr_code in (13, 14):
-            bits.read(16)
+            p += 2
         elif sr_code == 15:
             raise ValueError("invalid FLAC sample rate code")
         fbps = bps if bps_code == 0 else _BPS_CODES.get(bps_code)
         if fbps is None:
             raise ValueError("reserved FLAC sample size code")
-        # CRC-8 covers the header bytes up to (not incl.) the CRC byte
-        if bits.n:
-            raise ValueError("FLAC frame header not byte-aligned")
-        if _crc8(buf[frame_start : bits.pos]) != bits.read(8):
+        # CRC-8 covers the header bytes up to (not incl.) the CRC byte; a
+        # header cut short leaves p at or past the end
+        if p >= len(buf):
+            raise ValueError("FLAC bitstream truncated")
+        if _crc8(buf[frame_start:p]) != buf[p]:
             raise ValueError("FLAC frame header CRC-8 mismatch")
 
         if ch_code <= 7:
-            nch = ch_code + 1
-            if nch != channels:
+            if ch_code + 1 != channels:
                 raise ValueError("FLAC frame channel count mismatch")
-            subs = [
-                _decode_subframe(bits, blocksize, fbps) for _ in range(nch)
-            ]
+            widths = [fbps] * channels
         elif ch_code in (8, 9, 10):
             if channels != 2:
                 raise ValueError("stereo decorrelation in non-stereo stream")
-            extra0 = 1 if ch_code == 9 else 0  # side channel gets bps+1
-            extra1 = 1 if ch_code in (8, 10) else 0
-            a = _decode_subframe(bits, blocksize, fbps + extra0)
-            b = _decode_subframe(bits, blocksize, fbps + extra1)
-            if ch_code == 8:  # left/side: L, S=L-R
-                subs = [a, a - b]
-            elif ch_code == 9:  # right/side: S=L-R, R
-                subs = [a + b, b]
-            else:  # mid/side
-                m2 = (a << 1) | (b & 1)
-                subs = [(m2 + b) >> 1, (m2 - b) >> 1]
+            # the side channel gets bps+1
+            widths = [fbps + (ch_code == 9), fbps + (ch_code != 9)]
         else:
             raise ValueError("reserved FLAC channel assignment")
-        bits.align()
-        if _crc16(buf[frame_start : bits.pos]) != bits.read(16):
+        bit = 8 * (p + 1)
+        subs = []
+        for w in widths:
+            x, bit = _decode_subframe(s, bit, blocksize, w)
+            subs.append(x)
+        if ch_code == 8:  # left/side: L, S=L-R
+            a, b = subs
+            subs = [a, a - b]
+        elif ch_code == 9:  # right/side: S=L-R, R
+            a, b = subs
+            subs = [a + b, b]
+        elif ch_code == 10:  # mid/side
+            a, b = subs
+            m2 = (a << 1) | (b & 1)
+            subs = [(m2 + b) >> 1, (m2 - b) >> 1]
+        end = (bit + 7) >> 3  # the frame pads to a byte boundary
+        if end + 2 > len(buf):
+            raise ValueError("FLAC bitstream truncated")
+        if _crc16(buf[frame_start:end]) != (buf[end] << 8) | buf[end + 1]:
             raise ValueError("FLAC frame CRC-16 mismatch")
-        pos = bits.pos
+        pos = end + 2
         for c in range(channels):
             chans[c].append(subs[c])
         ndecoded += blocksize

@@ -498,12 +498,22 @@ def test_flac_corrupt_streams_terminate():
     """Robustness: random byte corruption and truncation of native FLAC
     streams always terminates promptly in a decode or a clean ValueError
     (in-band error row downstream) — CRC-8/16 catch payload damage, the
-    unary reader and partition checks bound every loop."""
+    unary reader and partition checks bound every loop — and ends exactly
+    as the scalar oracle decoder does on every such stream."""
+    from scalar_decoders import decode_flac as oracle_decode_flac
+
     from doc_quality_check_spark.functions.audio import synth_pcm
     from doc_quality_check_spark.functions.flac import (
         decode_flac,
         encode_flac,
     )
+
+    def outcome(decode, buf):
+        try:
+            sr, pcm = decode(buf)
+        except ValueError:
+            return None
+        return sr, pcm.tobytes()
 
     base = encode_flac(synth_pcm(3, 8000, 400), 8000, block_size=512)
     rng = np.random.default_rng(31)
@@ -512,13 +522,31 @@ def test_flac_corrupt_streams_terminate():
         buf = bytearray(base)
         for _ in range(int(rng.integers(1, 5))):
             buf[int(rng.integers(4, len(buf)))] = int(rng.integers(0, 256))
-        try:
-            decode_flac(bytes(buf))
-        except ValueError:
-            caught += 1
+        got = outcome(decode_flac, bytes(buf))
+        assert got == outcome(oracle_decode_flac, bytes(buf))
+        caught += got is None
     assert caught > 40  # CRCs catch most corruptions
     for cut in range(8, len(base), max(1, len(base) // 16)):
-        try:
-            decode_flac(bytes(base[:cut]))
-        except ValueError:
-            pass
+        got = outcome(decode_flac, bytes(base[:cut]))
+        assert got == outcome(oracle_decode_flac, bytes(base[:cut]))
+
+
+def test_decode_max_tasks_conf_must_be_an_integer(spark):
+    """A malformed decode-concurrency cap is a configuration error naming
+    its key, not a silently ignored setting."""
+    key = "spark.doc_quality_check.decode.maxTasks"
+    df = spark.createDataFrame(
+        [("a", bytearray(b""), "pcm_s16le")],
+        "clip_id string, bytes binary, codec string",
+    )
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "twelve")
+    try:
+        with pytest.raises(ValueError, match=key.replace(".", r"\.")):
+            with_audio_metrics(df)
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert with_audio_metrics(df).count() == 1
