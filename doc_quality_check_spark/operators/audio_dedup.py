@@ -135,8 +135,13 @@ def audio_neardup_pairs(
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
     n_blocks: int | None = None,
 ) -> DataFrame:
-    """Near-duplicate clip pairs (id_a, id_b, hamming) with fingerprint
-    Hamming distance <= max_hamming.
+    """Near-duplicate clip pairs; may MISS pairs at scale: a block bucket
+    over ``max_bucket_size`` members star-reduces and drops true pairs
+    between non-representative members. ``max_bucket_size=None`` gives
+    exact pairs.
+
+    Output (id_a, id_b, hamming), fingerprint Hamming distance <=
+    max_hamming.
 
     Candidates come from an equi-join on ``max_hamming + 1`` bit blocks of
     the fingerprint: if hamming(a,b) <= max_hamming, at most max_hamming

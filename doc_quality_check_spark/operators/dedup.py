@@ -574,10 +574,15 @@ def minhash_lsh_pairs(
     broadcast_sizes: bool = True,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
-    """Near-dup pairs via banded MinHash: band-bucket equi-join proposes
-    candidates; exact shingle Jaccard verifies >= threshold. Output
-    (id_a, id_b, jaccard). A pair at similarity s is caught with probability
-    1-(1-s^r)^b (r=4, b=4: s=0.97 → ~0.9998).
+    """Near-dup pairs via banded MinHash; may MISS pairs at scale: a band
+    bucket over ``max_bucket_size`` members star-reduces and drops true
+    pairs between non-representative members. ``max_bucket_size=None``
+    gives exact pairs.
+
+    A band-bucket equi-join proposes candidates; exact shingle Jaccard
+    verifies >= threshold. Output (id_a, id_b, jaccard). A pair at
+    similarity s is caught with probability 1-(1-s^r)^b (r=4, b=4:
+    s=0.97 → ~0.9998).
 
     ``max_bucket_size`` guards degenerate buckets (see :func:`banded_pairs`):
     buckets above the cap emit star edges (bucket-min, member) instead of
@@ -651,10 +656,14 @@ def simhash_pairs(
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
     n_blocks: int | None = None,
 ) -> DataFrame:
-    """Pairs with SimHash Hamming distance <= max_hamming →
-    (id_a, id_b, hamming). Candidates come from an equi-join on pigeonhole
-    block-combination keys (:func:`hamming_block_keys`); on small corpora
-    this resolves to the classic one-identical-8-bit-block scheme.
+    """SimHash pairs within ``max_hamming``; may MISS pairs at scale: a
+    block bucket over ``max_bucket_size`` members star-reduces and drops
+    true pairs between non-representative members. ``max_bucket_size=None``
+    gives exact pairs.
+
+    Output (id_a, id_b, hamming). Candidates come from an equi-join on
+    pigeonhole block-combination keys (:func:`hamming_block_keys`); on small
+    corpora this resolves to the classic one-identical-8-bit-block scheme.
 
     ``n_blocks=None`` (default) AUTO-SIZES the key from the corpus count
     (:func:`auto_hamming_blocks` over 4/6/8 blocks): 8-bit keys fill by

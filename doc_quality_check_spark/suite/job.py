@@ -34,6 +34,8 @@ from doc_quality_check_spark.suite.manifest import (
     schema_evolution_diff,
 )
 from doc_quality_check_spark.suite.report import (
+    collect_results,
+    collect_violation_sample,
     export_json,
     render_html,
     render_txt,
@@ -246,10 +248,22 @@ class ValidationJob:
             prev_viol = os.path.join(
                 self.out_dir, f"run_{prev.run_id:06d}", "violations")
             if os.path.isdir(prev_viol):
+                from py4j.protocol import Py4JJavaError
+                from pyspark.errors import AnalysisException
                 from pyspark.sql import functions as F
 
                 try:
                     pv = clips.sparkSession.read.parquet(prev_viol)
+                except (AnalysisException, Py4JJavaError) as exc:
+                    # a write cut short leaves no data file (only
+                    # _temporary/: AnalysisException, schema not inferable)
+                    # or a file that is not parquet (the footer read fails:
+                    # Py4JJavaError) — merge nothing and say so
+                    m.input_lineage["prior_violations_merge_skipped"] = {
+                        "run_id": prev.run_id,
+                        "error": type(exc).__name__,
+                    }
+                else:
                     if "part_key" in pv.columns:
                         keep = pv.filter(F.col("part_key").isin(completed))
                         if revalidate:
@@ -261,24 +275,30 @@ class ValidationJob:
                         res.violations = res.violations.unionByName(
                             keep.select(*res.violations.columns)
                         )
-                except Exception:
-                    pass  # unreadable/partial prior output — skip the merge
 
         # materialize result tables (violations first: triggers the cached
-        # metrics pass), then record per-partition metrics in the manifest
+        # metrics pass), then record per-partition metrics in the manifest.
+        # Each lazy plan is computed exactly once, by its write: from here on
+        # the written parquet IS the result, and every later sink (verdict
+        # rows, summary, violation sample, quarantine) reads it instead of
+        # recomputing the verdict groupBy shuffle or the violation union
         viol_path = os.path.join(self.out_dir, f"run_{m.run_id:06d}", "violations")
         verd_path = os.path.join(self.out_dir, f"run_{m.run_id:06d}", "verdicts")
+        spark = clips.sparkSession
         t_write = time.perf_counter()
         res.violations.write.mode("overwrite").parquet(viol_path)
-        verdict_rows = [r.asDict() for r in res.verdicts.collect()]
         res.verdicts.write.mode("overwrite").parquet(verd_path)
         write_sec = time.perf_counter() - t_write
+        res.violations = spark.read.parquet(viol_path)
+        res.verdicts = spark.read.parquet(verd_path)
+        # one collect feeds the manifest, baseline promotion and every report
+        verdict_rows, summary = collect_results(
+            res.verdicts, res.summary if formats else None)
         if sub_res is not None:
             # the revalidation sub-run's checked cache served its purpose
-            # once the unions above are materialized (violations written,
-            # verdicts collected) — release it rather than pinning a
-            # payload-decoded cache of the carried-forward partitions for
-            # the application lifetime
+            # once the unions above are written — release it rather than
+            # pinning a payload-decoded cache of the carried-forward
+            # partitions for the application lifetime
             sub_res.unpersist()
         self.manifests.record_partitions(m, verdict_rows)
         # per-operator timing in the manifest — the reference returns wall
@@ -302,20 +322,16 @@ class ValidationJob:
         # (collect_violation_sample passes a list straight through)
         vio_sample = None
         if {"txt", "html"} & set(formats):
-            from doc_quality_check_spark.suite.report import (
-                collect_violation_sample,
-            )
-
             vio_sample = collect_violation_sample(res.violations)
         for fmt in formats:
             if fmt == "txt":
-                content = render_txt(res.verdicts, res.summary, vio_sample,
+                content = render_txt(verdict_rows, summary, vio_sample,
                                      suite.name, m.run_id)
             elif fmt == "html":
-                content = render_html(res.verdicts, res.summary, vio_sample,
+                content = render_html(verdict_rows, summary, vio_sample,
                                       suite.name, m.run_id)
             else:
-                content = export_json(res.verdicts, res.summary,
+                content = export_json(verdict_rows, summary,
                                       suite.name, m.run_id)
             paths[fmt] = write_report(rep_dir, fmt, content, m.run_id, ts)
 
@@ -334,20 +350,16 @@ class ValidationJob:
             bad.write.mode("overwrite").parquet(q_path)
             m.input_lineage["quarantine"] = {
                 "path": q_path,
-                "n_rows": clips.sparkSession.read.parquet(q_path).count(),
+                "n_rows": spark.read.parquet(q_path).count(),
             }
             self.manifests.save(m)
         self.manifests.finish_run(m, "complete")
-        # every sink is materialized: rebind the result tables to their
-        # written parquet so later reads don't depend on the run's caches,
-        # then release the heavyweight extras (resume re-decode,
-        # payload_neardup) NOW — a long-lived service looping job.run()
-        # must not pin one full-table decode cache per run (round-5 review
-        # finding; res.checked stays cached for the caller, released by
-        # RunResult.unpersist())
-        spark = clips.sparkSession
-        res.violations = spark.read.parquet(viol_path)
-        res.verdicts = spark.read.parquet(verd_path)
+        # every sink is materialized and the result tables already read
+        # their written parquet: release the heavyweight extras (resume
+        # re-decode, payload_neardup) NOW — a long-lived service looping
+        # job.run() must not pin one full-table decode cache per run
+        # (round-5 review finding; res.checked stays cached for the caller,
+        # released by RunResult.unpersist())
         for cached in res.extra_caches:
             cached.unpersist()
         res.extra_caches = []

@@ -14,6 +14,12 @@ Scale discipline: renderers consume ONLY the already-aggregated result
 tables (verdicts, summary) plus a bounded sample of violation rows —
 ``toPandas()`` happens strictly after aggregation, never on the fact table
 (SURVEY.md §1.2 'pandas only at the final, already-aggregated sink').
+Collect once: every renderer also accepts the already-collected verdict
+rows (a list, ordered by part_key, constraint_id), summary (a dict) and
+violation sample (a list), and then starts no Spark job. A caller
+rendering several formats collects each input once and passes the
+results to all of them; ValidationJob collects from the written result
+parquet, never from the lazy verdict plan (a groupBy shuffle per action).
 """
 
 from __future__ import annotations
@@ -48,13 +54,20 @@ def collect_violation_sample(violations, max_violations: int = 100) -> list[dict
     )]
 
 
-def _fetch(verdicts: DataFrame, summary: DataFrame, violations,
-           max_violations: int):
-    vs = [r.asDict() for r in
-          verdicts.orderBy("part_key", "constraint_id").collect()]
-    sm = summary.first().asDict() if summary is not None else {}
-    vio = collect_violation_sample(violations, max_violations)
-    return vs, sm, vio
+def collect_results(verdicts, summary) -> tuple[list[dict], dict]:
+    """The verdict rows as dicts ordered by (part_key, constraint_id) and
+    the one-row summary as a dict (``{}`` for ``None``): what every
+    renderer formats. A list of rows (already in that order) and a dict
+    pass straight through, so a caller rendering several formats collects
+    once."""
+    if not isinstance(verdicts, list):
+        verdicts = [r.asDict() for r in
+                    verdicts.orderBy("part_key", "constraint_id").collect()]
+    if summary is None:
+        summary = {}
+    elif not isinstance(summary, dict):
+        summary = summary.first().asDict()
+    return verdicts, summary
 
 
 def _n_constraints(violations: DataFrame) -> int:
@@ -62,9 +75,10 @@ def _n_constraints(violations: DataFrame) -> int:
     return violations.select("constraint_id").distinct().count()
 
 
-def render_txt(verdicts: DataFrame, summary: DataFrame, violations,
+def render_txt(verdicts, summary, violations,
                suite_name: str, run_id: int, max_violations: int = 100) -> str:
-    vs, sm, vio = _fetch(verdicts, summary, violations, max_violations)
+    vs, sm = collect_results(verdicts, summary)
+    vio = collect_violation_sample(violations, max_violations)
     lines = [
         "=" * 72,
         f"VALIDATION REPORT — suite={suite_name} run={run_id}",
@@ -92,9 +106,10 @@ def render_txt(verdicts: DataFrame, summary: DataFrame, violations,
     return "\n".join(lines) + "\n"
 
 
-def render_html(verdicts: DataFrame, summary: DataFrame, violations,
+def render_html(verdicts, summary, violations,
                 suite_name: str, run_id: int, max_violations: int = 100) -> str:
-    vs, sm, vio = _fetch(verdicts, summary, violations, max_violations)
+    vs, sm = collect_results(verdicts, summary)
+    vio = collect_violation_sample(violations, max_violations)
     e = _html.escape
 
     def chip(ok: bool) -> str:
@@ -144,12 +159,9 @@ def render_html(verdicts: DataFrame, summary: DataFrame, violations,
 """
 
 
-def export_json(verdicts: DataFrame, summary: DataFrame,
-                suite_name: str, run_id: int) -> str:
+def export_json(verdicts, summary, suite_name: str, run_id: int) -> str:
     """S9: machine-readable run result (verdicts + summary) as one JSON doc."""
-    vs = [r.asDict() for r in
-          verdicts.orderBy("part_key", "constraint_id").collect()]
-    sm = summary.first().asDict() if summary is not None else {}
+    vs, sm = collect_results(verdicts, summary)
     return json.dumps(
         {"suite": suite_name, "run_id": run_id, "summary": sm, "verdicts": vs},
         indent=2, sort_keys=True, default=str,

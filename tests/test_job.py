@@ -56,6 +56,35 @@ def test_job_end_to_end(spark, clips_dir, tmp_path):
     assert m["input_lineage"]["timing_sec"]["table_checks"]["clip_id_unique"] >= 0
 
 
+def test_job_reports_match_dataframe_renderers(spark, clips_dir, tmp_path):
+    """The job renders every report from one collect of its result tables;
+    each report file is byte-identical to the renderer called on the
+    result DataFrames themselves."""
+    from doc_quality_check_spark.suite.report import (
+        collect_violation_sample,
+        export_json,
+        render_html,
+        render_txt,
+    )
+
+    clips = load_clips(spark, clips_dir).drop("bytes").limit(800)
+    suite = default_suite()
+    jr = ValidationJob(suite, str(tmp_path / "job_reports")).run(
+        clips, payload=False)
+    res, run_id = jr.result, jr.manifest.run_id
+    sample = collect_violation_sample(res.violations)
+    assert sample, "the input must produce violations to sample"
+    want = {
+        "txt": render_txt(res.verdicts, res.summary, sample, suite.name, run_id),
+        "html": render_html(res.verdicts, res.summary, sample, suite.name, run_id),
+        "json": export_json(res.verdicts, res.summary, suite.name, run_id),
+    }
+    for fmt, body in want.items():
+        with open(jr.report_paths[fmt]) as fh:
+            assert fh.read() == body, fmt
+    res.unpersist()
+
+
 def test_job_resume_skips_completed_partitions(spark, clips_dir, tmp_path):
     out = str(tmp_path / "job2")
     clips = load_clips(spark, clips_dir).drop("bytes").limit(800)
@@ -114,6 +143,48 @@ def test_job_resume_skips_completed_partitions(spark, clips_dir, tmp_path):
     # run 3 after a COMPLETE run does not resume (full revalidation)
     jr3 = job.run(clips, payload=False, resume=True)
     assert "resumed_from_partitions" not in jr3.manifest.input_lineage
+
+
+@pytest.mark.parametrize("leftover, error", [
+    ("part-00000.snappy.parquet", "Py4JJavaError"),   # not parquet bytes
+    ("_temporary/0/part-00000.snappy.parquet", "AnalysisException"),
+])
+def test_job_resume_skips_unreadable_prior_violations(
+        spark, clips_dir, tmp_path, leftover, error):
+    """A crashed prior run whose violations directory is unreadable (a
+    non-parquet file, or only the uncommitted _temporary/ of a write cut
+    short) still resumes to completion; the manifest records that the
+    prior violation rows were not merged, and why."""
+    import shutil
+
+    out = str(tmp_path / "job_bad_prior")
+    clips = load_clips(spark, clips_dir).drop("bytes").limit(800)
+    job = ValidationJob(_suite(), out)
+    jr1 = job.run(clips, payload=False, formats=())
+    m1 = job.manifests.load(jr1.manifest.run_id)
+    done = [pk for pk in m1.partitions if pk != GLOBAL_PART][:2]
+    m1.partitions = {pk: m1.partitions[pk] for pk in done}
+    m1.status = "running"
+    job.manifests.save(m1)
+    viol = os.path.join(out, f"run_{m1.run_id:06d}", "violations")
+    shutil.rmtree(viol)
+    os.makedirs(os.path.dirname(os.path.join(viol, leftover)))
+    with open(os.path.join(viol, leftover), "wb") as fh:
+        fh.write(b"this is not a parquet file")
+
+    jr2 = job.run(clips, payload=False, resume=True)
+    assert jr2.manifest.status == "complete"
+    lineage = jr2.manifest.input_lineage
+    assert lineage["resumed_from_partitions"] == sorted(done)
+    assert lineage["prior_violations_merge_skipped"] == {
+        "run_id": m1.run_id, "error": error,
+    }
+    # the skipped partitions' verdicts still merged from the manifest; no
+    # violation row of theirs could be carried
+    parts = {r["part_key"] for r in
+             jr2.result.verdicts.select("part_key").distinct().collect()}
+    assert set(done) <= parts
+    assert jr2.result.violations.filter(F.col("part_key").isin(done)).count() == 0
 
 
 def test_job_resume_global_checks_span_partitions(spark, clips_dir, tmp_path):

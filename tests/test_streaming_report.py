@@ -222,6 +222,47 @@ def test_report_renderers(run_result, tmp_path):
     assert os.path.exists(p) and p.endswith("report_7_20260101_000000.txt")
 
 
+def _jobs_in_group(sc, group: str, fn) -> list[int]:
+    """Spark job ids started by ``fn()`` under job group ``group``."""
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_report_renderers_from_collected_rows_start_no_job(spark, run_result):
+    """Collected verdict rows (a list), summary (a dict) and violation
+    sample (a list) render without a Spark job, to the same text as the
+    DataFrames they were collected from."""
+    from doc_quality_check_spark.suite.report import (
+        collect_results,
+        collect_violation_sample,
+    )
+
+    res = run_result
+    vs, sm = collect_results(res.verdicts, res.summary)
+    vio = collect_violation_sample(res.violations)
+    sc = spark.sparkContext
+    got = {}
+
+    def render_collected():
+        got["txt"] = render_txt(vs, sm, vio, "s1", 7)
+        got["html"] = render_html(vs, sm, vio, "s1", 7)
+        got["json"] = export_json(vs, sm, "s1", 7)
+
+    assert _jobs_in_group(sc, "report-collected", render_collected) == []
+    # the probe sees jobs: the same renderer on DataFrames starts some
+    assert _jobs_in_group(sc, "report-dataframes", lambda: render_txt(
+        res.verdicts, res.summary, vio, "s1", 7))
+    assert got["txt"] == render_txt(res.verdicts, res.summary, vio, "s1", 7)
+    assert got["html"] == render_html(res.verdicts, res.summary, vio, "s1", 7)
+    assert got["json"] == export_json(res.verdicts, res.summary, "s1", 7)
+
+
 def test_report_violation_sample_is_stratified(spark, run_result):
     """The violation listing samples PER CONSTRAINT: a constraint with 3
     violations still shows up even when another has thousands (a bare
