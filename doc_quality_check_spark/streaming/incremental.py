@@ -28,7 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from doc_quality_check_spark.suite.runner import SuiteRunner
+from doc_quality_check_spark.suite.runner import SuiteRunner, _demanded
 from doc_quality_check_spark.suite.spec import CheckSuite
 
 CLIPS_SCHEMA_DDL = (
@@ -65,9 +65,9 @@ def stream_validate(
     per window+group — append mode would hold open windows back until the
     watermark closes them, which an availableNow run may never reach) and
     covers METADATA row checks only: decoding the payload twice in a
-    parallel query would double the most expensive stage, so payload_*
-    checks and derived-metric references report through the per-batch
-    verdict path instead."""
+    parallel query would double the most expensive stage, so audio, image
+    and video checks (their row kinds, and references to their metric
+    columns) report through the per-batch verdict path instead."""
     runner = SuiteRunner(suite)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -98,30 +98,12 @@ def stream_validate(
 
     from doc_quality_check_spark.streaming.windowed import windowed_pass_rates
 
-    # metadata row checks only (see docstring): same skip rule as the
-    # runner's payload=False path — payload_* kinds AND generic checks
-    # referencing derived metric columns the un-decoded stream doesn't
-    # carry (including expr-kind checks, scanned textually like the
-    # runner's _references_metric)
-    import re as _re
-
-    from doc_quality_check_spark.suite.runner import DERIVED_METRIC_COLUMNS
-
-    missing_metric = {
-        c for c in DERIVED_METRIC_COLUMNS if c not in stream.columns
-    }
-
-    def _needs_decode(c) -> bool:
-        if c.kind.startswith("payload_"):
-            return True
-        if c.column in missing_metric:
-            return True
-        if c.kind == "expr":
-            expr = str(c.params.get("expr", ""))
-            return any(_re.search(rf"\b{m}\b", expr) for m in missing_metric)
-        return False
-
-    meta_checks = [c for c in suite.row_checks() if not _needs_decode(c)]
+    # metadata row checks only (see docstring): the runner's payload=False
+    # rule — a check demanding any modality's decode (audio, image or
+    # video; by kind or by a metric column the stream lacks) is skipped
+    meta_checks = [
+        c for c in suite.row_checks() if not _demanded(c, stream.columns)
+    ]
     wdf = windowed_pass_rates(
         stream,
         meta_checks,

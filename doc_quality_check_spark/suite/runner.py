@@ -4,7 +4,9 @@ Physical plan (the Spark translation of the reference's CLI lifecycle,
 /root/reference/test_readability.py:887-1044, SURVEY.md §3.1): the per-file
 ``for`` loop disappears — the table is the loop.
 
-  clips ── with_audio_metrics (one pandas-UDF pass, bytes column dropped)
+  clips ── one decode pass per demanded modality (``_MODALITIES``, in
+           table order: audio, image, video; each a vectorized pass that
+           drops its payload column)
         ── with_row_checks (pure Catalyst predicates + reason/status)
         ── persist  (decode-once cache: the reference's session_state reuse,
                      app.py:317-320; verdicts re-project cheaply)
@@ -15,6 +17,17 @@ Physical plan (the Spark translation of the reference's CLI lifecycle,
         │                         drift — each its own small aggregate)
         └─ global summary        (one agg)
 
+A check demands a modality's decode when its kind is one of that
+modality's row kinds or it references one of its metric columns
+(``_demands``); a metric column the raw table already carries is the raw
+column, not a decode trigger. The audio pass keeps its F5 mode dispatch
+(``with_payload_metrics``) and always decodes ``bytes``; image and video
+decode the one payload column their row kinds name. ``bytes`` is dropped
+before the first pass unless a pass consumes it, so the audio payload
+never crosses another modality's pass. On resume, table checks re-run
+the full decode of each modality whose metric columns they read, through
+the same loop.
+
 Shuffles: exactly one for the partition verdicts, one per table-level
 aggregate/join — nothing shuffles the binary payload (dropped before any
 wide operation).
@@ -22,7 +35,9 @@ wide operation).
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -35,10 +50,22 @@ from pyspark.sql.types import (
 )
 
 from doc_quality_check_spark.functions.audio import with_audio_metrics, with_payload_metrics
+from doc_quality_check_spark.functions.media import (
+    IMAGE_METRIC_COLUMNS,
+    VIDEO_METRIC_COLUMNS,
+    with_image_metrics,
+    with_video_metrics,
+)
 from doc_quality_check_spark.operators.aggregates import drift_ks, drift_psi, histogram
 from doc_quality_check_spark.operators.joins import duplicate_keys, referential_violations
 from doc_quality_check_spark.suite.compiler import PASS_PREFIX, row_violations, with_row_checks
-from doc_quality_check_spark.suite.spec import Check, CheckSuite
+from doc_quality_check_spark.suite.spec import (
+    AUDIO_ROW_KINDS,
+    IMAGE_ROW_KINDS,
+    VIDEO_ROW_KINDS,
+    Check,
+    CheckSuite,
+)
 
 GLOBAL_PART = "__global__"
 
@@ -115,31 +142,85 @@ class RunResult:
             df.unpersist()
 
 
-def _media_payload_col(checks, kinds, label: str) -> str:
-    """The PAYLOAD column for one modality's decode pass: named by that
-    modality's row kinds' ``.column``; generic checks referencing its
-    metric columns ride the same decode and default to ``bytes``."""
-    cols = {c.column or "bytes" for c in checks if c.kind in kinds} or {
-        "bytes"
-    }
-    if len(cols) > 1:
-        raise ValueError(
-            f"{label} checks must share one payload column, "
-            f"got {sorted(cols)}"
-        )
-    return cols.pop()
+@dataclass(frozen=True)
+class _Modality:
+    """One payload modality: the row kinds and metric columns that demand
+    its decode, and its full-decode pass ``decode(df, payload_col=...)``
+    (one vectorized pass that drops the payload column)."""
+
+    name: str
+    kinds: set[str]
+    metric_cols: set[str]
+    decode: Callable[..., DataFrame]
+    # a fixed payload column; None = the one named by the row kinds' checks
+    payload_col: str | None = None
+
+    def payload_column(self, checks: list[Check]) -> str:
+        if self.payload_col:
+            return self.payload_col
+        cols = {c.column or "bytes" for c in checks if c.kind in self.kinds}
+        if len(cols) > 1:
+            raise ValueError(
+                f"{self.name} checks must share one payload column, "
+                f"got {sorted(cols)}"
+            )
+        return cols.pop() if cols else "bytes"
 
 
-def _image_payload_col(image_checks) -> str:
-    from doc_quality_check_spark.suite.spec import IMAGE_ROW_KINDS
+# in decode order: audio runs first and always consumes 'bytes'
+_MODALITIES = (
+    _Modality("audio", AUDIO_ROW_KINDS, DERIVED_METRIC_COLUMNS,
+              with_audio_metrics, payload_col="bytes"),
+    _Modality("image", IMAGE_ROW_KINDS, set(IMAGE_METRIC_COLUMNS),
+              with_image_metrics),
+    _Modality("video", VIDEO_ROW_KINDS, set(VIDEO_METRIC_COLUMNS),
+              with_video_metrics),
+)
 
-    return _media_payload_col(image_checks, IMAGE_ROW_KINDS, "image")
+
+def _demands(check: Check, kinds: set[str], cols: set[str]) -> bool:
+    """Whether ``check`` needs the decode of the modality with row kinds
+    ``kinds`` and undecoded metric columns ``cols``: by kind, by its
+    column, or (expr checks) by naming a metric column in the text."""
+    if check.kind in kinds or check.column in cols:
+        return True
+    if check.kind == "expr":
+        expr = str(check.params.get("expr", ""))
+        return any(re.search(rf"\b{m}\b", expr) for m in cols)
+    return False
 
 
-def _video_payload_col(video_checks) -> str:
-    from doc_quality_check_spark.suite.spec import VIDEO_ROW_KINDS
+def _demanded(check: Check, columns) -> list[_Modality]:
+    """The modalities whose decode ``check`` needs over a table with
+    ``columns``. A metric column the table already carries is the raw
+    column: it never triggers a decode (no silent shadowing)."""
+    return [
+        m for m in _MODALITIES
+        if _demands(check, m.kinds, m.metric_cols - set(columns))
+    ]
 
-    return _media_payload_col(video_checks, VIDEO_ROW_KINDS, "video")
+
+def _decode(df: DataFrame, passes) -> DataFrame:
+    """Run ``(modality, payload column, decode)`` passes in order. ``bytes``
+    is dropped first unless a pass consumes it. A payload column that is
+    missing, or consumed by an earlier pass, raises one ValueError."""
+    if all(col != "bytes" for _, col, _ in passes):
+        df = df.drop("bytes")
+    consumed: dict[str, str] = {}
+    for m, col, decode in passes:
+        if col not in df.columns:
+            raise ValueError(
+                f"{m.name} checks reference missing payload column {col!r}"
+                + (
+                    f" (consumed by the {consumed[col]} decode; each "
+                    "modality needs its own payload column)"
+                    if col in consumed
+                    else ""
+                )
+            )
+        consumed[col] = m.name
+        df = decode(df, payload_col=col)
+    return df
 
 
 class SuiteRunner:
@@ -181,209 +262,30 @@ class SuiteRunner:
             )
 
         row_checks = suite.row_checks()
-        # decode is needed for payload_* checks AND for generic checks that
-        # reference a DERIVED metric column (e.g. in_range on rms_db) —
-        # unless the raw table already carries a column of that name, in
-        # which case the raw column wins (no silent shadowing by decode
-        # output). expr-kind checks are scanned textually for metric names.
-        import re as _re
-
-        metric_cols = {
-            c for c in DERIVED_METRIC_COLUMNS if c not in clips.columns
-        }
-
-        def _references_metric(c) -> bool:
-            if c.column in metric_cols:
-                return True
-            if c.kind == "expr":
-                expr = str(c.params.get("expr", ""))
-                return any(_re.search(rf"\b{m}\b", expr) for m in metric_cols)
-            return False
-
         # table-level checks (e.g. quantile_range on spectral_flatness) also
         # demand decode and count toward the mode floor — otherwise they'd
         # silently compute their verdict over an all-NULL column
         table_checks = suite.table_checks()
         if not payload:
-            # payload=False is the metadata-only contract: payload_neardup
-            # decodes+fingerprints the bytes column, so it is skipped the
-            # same way row-level payload checks are below
+            # payload=False is the metadata-only contract: no decode runs,
+            # so row checks demanding one are skipped, and so is
+            # payload_neardup (it decodes+fingerprints the bytes column)
+            row_checks = [c for c in row_checks if not _demanded(c, clips.columns)]
             table_checks = [c for c in table_checks if c.kind != "payload_neardup"]
-        from doc_quality_check_spark.functions.media import (
-            IMAGE_METRIC_COLUMNS,
-            VIDEO_METRIC_COLUMNS,
-        )
-        from doc_quality_check_spark.suite.spec import (
-            IMAGE_ROW_KINDS,
-            VIDEO_ROW_KINDS,
-        )
-
-        def _references_media(c, metric_columns) -> bool:
-            # generic checks (in_range/expr/... on img_luma_mean /
-            # vid_fps etc.) demand that modality's decode exactly as
-            # metric-referencing generic checks demand the audio decode
-            if c.column in metric_columns:
-                return True
-            if c.kind == "expr":
-                expr = str(c.params.get("expr", ""))
-                return any(
-                    _re.search(rf"\b{m}\b", expr) for m in metric_columns
-                )
-            return False
-
-        def _references_image(c) -> bool:
-            return _references_media(c, IMAGE_METRIC_COLUMNS)
-
-        def _references_video(c) -> bool:
-            return _references_media(c, VIDEO_METRIC_COLUMNS)
-
-        # image/video row kinds (and generic checks referencing an img_*/
-        # vid_* column) run their own media decode pass (not the audio
-        # one) — they must not trigger with_payload_metrics
-        image_checks = (
-            [
-                c
-                for c in [*row_checks, *table_checks]
-                if c.kind in IMAGE_ROW_KINDS or _references_image(c)
-            ]
+        checks = [*row_checks, *table_checks]
+        demanded = (
+            {m.name for c in checks for m in _demanded(c, clips.columns)}
             if payload
-            else []
+            else set()
         )
-        video_checks = (
-            [
-                c
-                for c in [*row_checks, *table_checks]
-                if c.kind in VIDEO_ROW_KINDS or _references_video(c)
-            ]
-            if payload
-            else []
-        )
-        _media_row_kinds = IMAGE_ROW_KINDS | VIDEO_ROW_KINDS
-        needs_payload = payload and (
-            any(
-                c.kind.startswith("payload_")
-                and c.kind not in _media_row_kinds
-                for c in row_checks
-            )
-            or any(_references_metric(c) for c in [*row_checks, *table_checks])
-        )
-        df = clips
-        if needs_payload:
-            # F5 mode dispatch: per-check params["mode"] values win over the
-            # suite-wide settings["payload_mode"]; when checks disagree, the
-            # STRONGEST requested tier runs (metrics are computed once for
-            # all checks — an 'accurate' check must never be evaluated
-            # against a cheaper tier's confidence). Default 'accurate'.
-            strength = {"superfast": 0, "balanced": 1, "fast": 2, "accurate": 3}
-            payload_checks = [
-                c for c in row_checks
-                if c.kind.startswith("payload_")
-                and c.kind not in _media_row_kinds
-            ]
-            requested = [
-                c.params["mode"] for c in payload_checks
-                if c.params.get("mode") in strength
-            ]
-            if requested:
-                mode = max(requested, key=strength.__getitem__)
-            else:
-                mode = suite.settings.get("payload_mode", "accurate")
-            if mode not in strength:
-                # unknown mode string falls back to 'balanced' (same rule as
-                # with_payload_metrics) — must happen before the strength
-                # comparison below, which would otherwise KeyError
-                mode = "balanced"
-            # generic checks referencing derived metric columns force a tier
-            # that actually produces them: full decode at least; the
-            # spectral column only exists in 'accurate'. Table-level checks
-            # count too (a quantile_range on spectral_flatness needs the
-            # column populated, not merely present-and-NULL).
-            generic_metric = {
-                c.column for c in [*row_checks, *table_checks]
-                if c.column in metric_cols and not c.kind.startswith("payload_")
-            }
-            if generic_metric:
-                floor = "accurate" if "spectral_flatness" in generic_metric else "fast"
-                mode = max((mode, floor), key=strength.__getitem__)
-            df, self.effective_payload_mode = with_payload_metrics(
-                df,
-                checks=payload_checks,
-                mode=mode,
-                escalate_below=float(suite.settings.get("escalate_below", 15.0)),
-            )
-        else:
-            # metadata-only / audio-free path: skip AUDIO payload checks and
-            # generic checks that reference derived metric columns (no audio
-            # decode means those columns don't exist); image/video kinds
-            # survive here when payload=True — their decode passes run below
-            row_checks = [
-                c for c in row_checks
-                if (
-                    payload
-                    and (
-                        c.kind in _media_row_kinds
-                        or _references_image(c)
-                        or _references_video(c)
-                    )
-                )
-                or (
-                    c.kind not in _media_row_kinds
-                    and not c.kind.startswith("payload_")
-                    and not _references_metric(c)
-                    and not _references_image(c)
-                    and not _references_video(c)
-                )
-            ]
-            # a media-only table may carry its payload in 'bytes' — the
-            # image/video pass below consumes (and drops) it itself
-            media_owns_bytes = (
-                image_checks and _image_payload_col(image_checks) == "bytes"
-            ) or (
-                video_checks and _video_payload_col(video_checks) == "bytes"
-            )
-            if not media_owns_bytes:
-                df = df.drop("bytes")
-        if image_checks:
-            from doc_quality_check_spark.functions.media import with_image_metrics
-
-            img_col = _image_payload_col(image_checks)
-            if img_col not in df.columns:
-                raise ValueError(
-                    f"image checks reference missing column {img_col!r}"
-                    + (
-                        " (consumed by the audio decode — image checks must "
-                        "target a separate column from the audio payload)"
-                        if needs_payload and img_col == "bytes"
-                        else ""
-                    )
-                )
-            # one mapInPandas decode pass; img_col is dropped inside (the
-            # image binary never shuffles). Mixed-modality note: when the
-            # audio pass above also ran, this image binary column crossed
-            # that stage's Arrow transfer — acceptable at check time, but a
-            # very wide media table should split modalities into separate
-            # suites/tables to keep each binary column inside its own scan.
-            df = with_image_metrics(df, payload_col=img_col)
-        if video_checks:
-            from doc_quality_check_spark.functions.media import (
-                with_video_metrics,
-            )
-
-            vid_col = _video_payload_col(video_checks)
-            if vid_col not in df.columns:
-                raise ValueError(
-                    f"video checks reference missing column {vid_col!r}"
-                    + (
-                        " (consumed by an earlier decode — video checks "
-                        "must target their own payload column)"
-                        if vid_col == "bytes"
-                        and (needs_payload or image_checks)
-                        else ""
-                    )
-                )
-            # one bounded mapInPandas pass (container metadata + <=3
-            # sampled frames per row); vid_col is dropped inside
-            df = with_video_metrics(df, payload_col=vid_col)
+        # the row pass decodes audio through its mode dispatch, not the
+        # full decode the table-check re-decode uses
+        row_pass = {"audio": self._audio_row_pass(checks, clips.columns)}
+        df = _decode(clips, [
+            (m, m.payload_column(checks), row_pass.get(m.name, m.decode))
+            for m in _MODALITIES
+            if m.name in demanded
+        ])
         df = with_row_checks(df, row_checks).persist()
 
         id_col = "clip_id"
@@ -447,63 +349,21 @@ class SuiteRunner:
                         )
                     needed.add(c.params["col2"])
             missing = needed - set(table_df.columns)
-            if missing:
-                if payload and (
-                    missing & DERIVED_METRIC_COLUMNS
-                    or missing & set(IMAGE_METRIC_COLUMNS)
-                    or missing & set(VIDEO_METRIC_COLUMNS)
-                ):
-                    src = full_clips if resuming else clips
-                    if missing & DERIVED_METRIC_COLUMNS:
-                        src = with_audio_metrics(src)
-                    if missing & set(IMAGE_METRIC_COLUMNS):
-                        # resume path: table_df = full_clips.drop('bytes')
-                        # loses img_* columns too — re-run the image decode
-                        # over the same payload column the row pass used
-                        from doc_quality_check_spark.functions.media import (
-                            with_image_metrics,
-                        )
-
-                        img_col = (
-                            _image_payload_col(image_checks)
-                            if image_checks
-                            else "bytes"
-                        )
-                        if img_col not in src.columns:
-                            raise ValueError(
-                                "image table checks reference missing "
-                                f"payload column {img_col!r}"
-                            )
-                        src = with_image_metrics(src, payload_col=img_col)
-                    if missing & set(VIDEO_METRIC_COLUMNS):
-                        from doc_quality_check_spark.functions.media import (
-                            with_video_metrics,
-                        )
-
-                        vid_col = (
-                            _video_payload_col(video_checks)
-                            if video_checks
-                            else "bytes"
-                        )
-                        if vid_col not in src.columns:
-                            # e.g. both modalities defaulting to 'bytes':
-                            # the image pass above already consumed it —
-                            # clean error, not an executor KeyError
-                            raise ValueError(
-                                "video table checks reference missing "
-                                f"payload column {vid_col!r} (consumed by "
-                                "an earlier decode pass — video checks "
-                                "must target their own payload column)"
-                            )
-                        src = with_video_metrics(src, payload_col=vid_col)
-                    resume_cache = src.persist()
-                    resume_cache.count()
-                    table_df = resume_cache
-                else:
-                    raise ValueError(
-                        f"table checks reference missing columns: {sorted(missing)}"
-                        + ("" if payload else " (payload=False, decode disabled)")
-                    )
+            # re-run the full decode of every modality whose metric columns
+            # the table checks read (the resume path's table_df lost them)
+            redo = [m for m in _MODALITIES if payload and missing & m.metric_cols]
+            if redo:
+                src = full_clips if resuming else clips
+                resume_cache = _decode(src, [
+                    (m, m.payload_column(checks), m.decode) for m in redo
+                ]).persist()
+                resume_cache.count()
+                table_df = resume_cache
+            elif missing:
+                raise ValueError(
+                    f"table checks reference missing columns: {sorted(missing)}"
+                    + ("" if payload else " (payload=False, decode disabled)")
+                )
             def _is_simple(c):
                 # quantile_range with method=tdigest runs its own two-level
                 # digest job — it can't fuse into the scalar aggregate
@@ -593,6 +453,44 @@ class SuiteRunner:
         return RunResult(checked=df, violations=viols, verdicts=verdicts,
                          summary=summary, table_metrics=check_timings,
                          extra_caches=self._run_caches)
+
+    def _audio_row_pass(self, checks: list[Check], columns):
+        """The audio row pass: F5 mode dispatch through with_payload_metrics.
+        Per-check params["mode"] values win over the suite-wide
+        settings["payload_mode"]; when checks disagree, the STRONGEST
+        requested tier runs (metrics are computed once for all checks — an
+        'accurate' check must never be evaluated against a cheaper tier's
+        confidence). Default 'accurate'. Generic checks (row or table
+        level) on a derived metric column force a tier that produces it:
+        full decode at least, 'accurate' for the spectral column. An
+        unknown mode ranks below every tier; with_payload_metrics owns its
+        fallback."""
+        strength = {"superfast": 0, "balanced": 1, "fast": 2, "accurate": 3}
+        audio_checks = [c for c in checks if c.kind in AUDIO_ROW_KINDS]
+        requested = [
+            c.params["mode"] for c in audio_checks
+            if c.params.get("mode") in strength
+        ]
+        if requested:
+            mode = max(requested, key=strength.__getitem__)
+        else:
+            mode = self.suite.settings.get("payload_mode", "accurate")
+        generic_metric = {
+            c.column for c in checks if c.kind not in AUDIO_ROW_KINDS
+        } & (DERIVED_METRIC_COLUMNS - set(columns))
+        if generic_metric:
+            floor = "accurate" if "spectral_flatness" in generic_metric else "fast"
+            mode = max((mode, floor), key=lambda m: strength.get(m, -1))
+        escalate_below = float(self.suite.settings.get("escalate_below", 15.0))
+
+        def decode(df, payload_col):
+            df, self.effective_payload_mode = with_payload_metrics(
+                df, checks=audio_checks, mode=mode, payload_col=payload_col,
+                escalate_below=escalate_below,
+            )
+            return df
+
+        return decode
 
     # ------------------------------------------------------------------
     def _partition_verdicts(self, df, row_checks: list[Check], part_cols: list[str]):

@@ -64,8 +64,16 @@ ROW_LEVEL_KINDS = {
     "video_luma_range",
 }
 
-# row-level kinds that require an IMAGE payload decode (media.py), as
-# opposed to the audio payload_* kinds served by with_payload_metrics
+# row-level kinds that require an AUDIO payload decode (with_payload_metrics)
+AUDIO_ROW_KINDS = {
+    "payload_energy",
+    "payload_decode",
+    "payload_sr_consistency",
+    "payload_dur_consistency",
+    "payload_clipping",
+}
+
+# row-level kinds that require an IMAGE payload decode (media.py)
 IMAGE_ROW_KINDS = {"payload_image_decode", "image_luma_range"}
 
 # row-level kinds that require a VIDEO payload decode (with_video_metrics)

@@ -504,6 +504,42 @@ def test_stream_validate_windowed_output(spark, tmp_path):
     assert act == exp and len(act) >= 3
 
 
+def test_stream_validate_windowed_skips_media_checks(spark, tmp_path):
+    """The windowed query covers metadata checks only: image and video
+    checks (their row kinds and references to their metric columns) are
+    left to the per-batch verdict path instead of being compiled against
+    the undecoded stream."""
+    import datetime
+
+    base = datetime.datetime(2026, 1, 1, 12, 0, 0)
+    img = bytearray(encode_fake_image(7, 8, 8))
+    rows = [(f"c{i}", base + datetime.timedelta(minutes=i), i % 3, img, "p0")
+            for i in range(12)]
+    schema = "clip_id string, ts timestamp, dur_ms int, img binary, part_key string"
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(inp)
+
+    suite = CheckSuite(
+        name="win_media", partition_by=["part_key"],
+        checks=[
+            Check("dur_pos", "in_range", "dur_ms", {"min": 1, "max": 10}),
+            Check("img_luma", "image_luma_range", "img", {"min": 0, "max": 255}),
+            Check("fps_ok", "video_frame_rate", "video", {"min": 1, "max": 60}),
+            Check("img_wide", "in_range", "img_width", {"min": 1, "max": 99}),
+        ],
+    )
+    qs = stream_validate(
+        spark, suite, inp, out, schema_ddl=schema, payload=False,
+        windowed={"ts_col": "ts", "window_len": "1 hour"},
+    )
+    for q in qs:
+        assert q.awaitTermination(120)
+
+    got = spark.read.parquet(out + "/windowed")
+    assert [c for c in got.columns if c.startswith("nv__")] == ["nv__dur_pos"]
+    assert sum(r["nv__dur_pos"] for r in got.collect()) == 4
+
+
 def test_y4m_high_bit_depth_luma():
     """C420p10/p12 Y4M (round-4 advice follow-through): 2-byte
     little-endian samples parse with the correct plane sizes and reduce to

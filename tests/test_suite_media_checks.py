@@ -416,6 +416,75 @@ def test_generic_checks_reference_video_metrics(spark, video_table):
     res.unpersist()
 
 
+@pytest.mark.parametrize(
+    "checks, message",
+    [
+        (
+            [Check("a", "payload_image_decode", "img"),
+             Check("b", "image_luma_range", "img2", {"min": 0, "max": 255})],
+            r"^image checks must share one payload column, "
+            r"got \['img', 'img2'\]$",
+        ),
+        (
+            [Check("a", "payload_decode", "bytes", {"threshold": 15.0}),
+             Check("b", "payload_image_decode", "bytes")],
+            r"^image checks reference missing payload column 'bytes' "
+            r"\(consumed by the audio decode; each modality needs its own "
+            r"payload column\)$",
+        ),
+        (
+            [Check("a", "payload_image_decode", "bytes"),
+             Check("b", "payload_video_decode", "bytes")],
+            r"^video checks reference missing payload column 'bytes' "
+            r"\(consumed by the image decode; each modality needs its own "
+            r"payload column\)$",
+        ),
+    ],
+    ids=["two_image_columns", "image_after_audio", "video_after_image"],
+)
+def test_payload_column_errors_are_uniform(media_table, checks, message):
+    """Every missing or consumed payload column fails the same way, before
+    any decode runs."""
+    table = media_table.withColumn("codec", F.lit("pcm_s16le"))
+    with pytest.raises(ValueError, match=message):
+        SuiteRunner(CheckSuite(name="bad", checks=checks)).run(table)
+
+
+def test_media_table_checks_resume_redecode(spark, media_table, video_table):
+    """On resume, table checks on img_*/vid_* columns re-run the image and
+    video decode over the FULL input: their global verdicts equal the full
+    run's."""
+    img = {r["clip_id"]: r["bytes"] for r in media_table.collect()}
+    vid = [r["bytes"] for r in video_table.collect()]
+    rows = [(cid, f"p{i % 2}", b, vid[i % len(vid)])
+            for i, (cid, b) in enumerate(sorted(img.items()))]
+    table = spark.createDataFrame(
+        rows, "clip_id string, part_key string, img binary, video binary")
+    suite = CheckSuite(
+        name="media_resume", partition_by=["part_key"],
+        checks=[
+            Check("img_decodes", "payload_image_decode", "img"),
+            Check("vid_decodes", "payload_video_decode", "video"),
+            Check("img_p50", "quantile_range", "img_luma_mean",
+                  {"q": 0.5, "min": 0.0, "max": 255.0}),
+            Check("fps_p50", "quantile_range", "vid_fps",
+                  {"q": 0.5, "min": 1.0, "max": 60.0}),
+        ],
+    )
+
+    def global_rows(res):
+        out = sorted(tuple(r) for r in res.verdicts.collect()
+                     if r["part_key"] == GLOBAL_PART)
+        res.unpersist()
+        return out
+
+    full = global_rows(SuiteRunner(suite).run(table))
+    resumed = global_rows(
+        SuiteRunner(suite).run(table, completed_partitions=["p0"]))
+    assert [r[1] for r in full] == ["fps_p50", "img_p50"]
+    assert resumed == full
+
+
 def test_audio_codec_matrix_through_suite(spark):
     """Round 5: the declarative payload checks hold across the WHOLE audio
     codec matrix — PCM16, mu-law, A-law, float32, IMA ADPCM, native

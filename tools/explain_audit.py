@@ -5,7 +5,9 @@ the physical plans the engine is designed around (SURVEY.md §4):
   in particular nothing but the payload path may read `bytes`);
 - filters are PUSHED into the scan (PushedFilters non-empty where expected);
 - catalog joins BROADCAST (no sort-merge for small dims);
-- non-UDF expression pipelines run inside WholeStageCodegen.
+- non-UDF expression pipelines run inside WholeStageCodegen;
+- a mixed-modality suite decodes each payload in exactly one pass, with no
+  shuffle below a decode node.
 
 Run: python tools/explain_audit.py   (prints one PASS/FAIL line per audit)
 """
@@ -79,6 +81,39 @@ def run_audits(spark) -> list[tuple[str, bool, str]]:
     read = p.split("ReadSchema: ")[-1].split("\n")[0] if "ReadSchema: " in p else p
     audit("metadata-only suite prunes bytes", "bytes" not in read, read[:120])
     res.unpersist()
+
+    # 5b. mixed audio+image suite: one decode pass per modality, the audio
+    #     payload never rides into the image pass, and no shuffle sits
+    #     below a decode node (plans print root-first: all text after the
+    #     topmost decode node feeds it) — at two shuffle settings
+    from doc_quality_check_spark.functions.media import encode_fake_image
+
+    mixed = CheckSuite(
+        name="mixed", partition_by=["part_key"],
+        checks=[Check("dec", "payload_decode", "bytes", {"threshold": 15.0}),
+                Check("img", "payload_image_decode", "img")],
+    )
+    mixed_clips = clips.withColumn(
+        "img", F.lit(bytearray(encode_fake_image(7, 8, 8))))
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n in (8, 64):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            res = SuiteRunner(mixed).run(mixed_clips)
+            p = plan_of(res.checked)
+            res.unpersist()
+            map_in = p.split("MapInPandas", 1)[-1].split(")#", 1)[0]
+            first = min((p.find(k) for k in ("ArrowEvalPython", "MapInPandas")
+                         if k in p), default=len(p))
+            audit(f"mixed suite one audio ArrowEvalPython (shuffle={n})",
+                  p.count("ArrowEvalPython") == 1 and "audio_metrics_udf" in p)
+            audit(f"mixed suite one image MapInPandas without bytes (shuffle={n})",
+                  p.count("MapInPandas") == 1 and "bytes#" not in map_in,
+                  map_in[:120])
+            audit(f"mixed suite no Exchange below decode (shuffle={n})",
+                  "Exchange" not in p[first:])
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)
 
     # 6. dedup jaccard: the shingle equi-join must be a hash join with
     #    map-side partial aggregation (no cartesian / nested loop)
