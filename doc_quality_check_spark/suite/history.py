@@ -6,13 +6,13 @@ the TEMPORAL view: "is this run's pass rate / row count / quantile metric
 an outlier against the trail of previous runs?" — the validation-engine
 pattern popularized by Deequ's anomaly detection on metric repositories.
 
-The metric repository already exists: every run's manifest
-(suite/manifest.py) records per-(partition, constraint) n_rows,
-n_violations, passed, and metric_value. This module reads that trail and
-flags the newest run's metrics that sit outside k·stddev (or a relative
-band) of the history — pure driver-side arithmetic over a handful of JSON
-files; no Spark jobs (manifests are small by construction: one row per
-partition × constraint).
+The metric repository already exists: every run's verdict parquet holds
+per-(partition, constraint) n_rows, n_violations, passed and metric_value,
+and its manifest (suite/manifest.py) holds that path and the ``__global__``
+rows. This module reads that trail and flags the newest run's metrics that
+sit outside k·stddev (or a relative band) of the history — driver-side, no
+Spark job: ``__global__`` metrics come from the JSON manifests, others from
+a pyarrow read of each run's parquet filtered to one (partition, constraint).
 """
 
 from __future__ import annotations
@@ -31,15 +31,13 @@ def load_manifests(store: ManifestStore) -> list[dict]:
     constraints over long trails should load once and pass the result to
     metric_history/detect_anomaly via ``manifests=`` rather than re-reading
     N files per constraint. Also the public way to enumerate partition keys
-    (``manifests[-1]["partitions"]``) without touching store internals."""
+    (``manifests[-1]["partitions"]``; their metrics are in each run's
+    ``verdicts_path``) without touching store internals."""
     out = []
     for path in store._paths():
         with open(path) as f:
             out.append(json.load(f))
     return sorted(out, key=lambda m: int(m.get("run_id", 0)))
-
-
-_manifests = load_manifests  # backward-compat alias
 
 
 def metric_history(
@@ -53,12 +51,28 @@ def metric_history(
     first, skipping runs where the metric is absent/None (e.g. the
     constraint was added later — histories survive suite evolution)."""
     out: list[tuple[int, float]] = []
-    for m in manifests if manifests is not None else _manifests(store):
-        checks = m.get("partitions", {}).get(part_key, {}).get("checks", {})
-        v = checks.get(constraint_id, {}).get(metric)
+    for m in manifests if manifests is not None else load_manifests(store):
+        v = _run_metric(m, constraint_id, part_key, metric)
         if v is not None:
             out.append((int(m["run_id"]), float(v)))
     return sorted(out)
+
+
+def _run_metric(m: dict, constraint_id: str, part_key: str, metric: str):
+    """One run's metric, or None. A manifest without a verdicts path
+    (hand-written, or its run crashed first) is read for its own checks."""
+    path = m.get("verdicts_path")
+    if part_key == GLOBAL_PART or not path:
+        checks = m.get("partitions", {}).get(part_key, {}).get("checks", {})
+        return checks.get(constraint_id, {}).get(metric)
+    import pyarrow.parquet as pq
+
+    vals = pq.read_table(
+        path, columns=[metric],
+        filters=[("part_key", "=", part_key),
+                 ("constraint_id", "=", constraint_id)],
+    ).column(metric).to_pylist()
+    return vals[0] if vals else None
 
 
 @dataclass
@@ -97,7 +111,7 @@ def detect_anomaly(
     the run started but its partitions aren't recorded yet), no verdict is
     invented about a stale run: the result is non-anomalous with an
     explicit reason, and ``run_id`` always names the run actually judged."""
-    manifests = _manifests(store)
+    manifests = load_manifests(store)
     trail = metric_history(store, constraint_id, part_key, metric,
                            manifests=manifests)
     newest = int(manifests[-1]["run_id"]) if manifests else None

@@ -10,10 +10,13 @@ summary), extended with the north rule's checkpoint/resume semantics:
 2. skip partitions the latest complete-or-crashed run already validated
    (resume = anti-join on the manifest's completed partition set, which
    partition-prunes because part_key is the table's partition column);
-3. run the SuiteRunner; record per-partition verdict metrics back into the
-   manifest as they materialize;
-4. write violation rows + verdict rows as parquet result tables and render
-   the TXT/HTML/JSON reports with the reference's report_<id>_<ts> naming.
+3. run the SuiteRunner; carry the skipped partitions' verdict and
+   violation rows forward from the prior run's result tables;
+4. write violation rows + verdict rows as parquet result tables — the
+   verdict table is the only store of per-partition metrics; the manifest
+   records its path, each partition's status and the table-level verdicts —
+   and render the TXT/HTML/JSON reports with the reference's
+   report_<id>_<ts> naming.
 
 Deployment: ``spark-submit --py-files dist/dqcs.zip
 doc_quality_check_spark/suite/job.py <clips_path_or_table> <out_dir>``
@@ -27,6 +30,7 @@ import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from doc_quality_check_spark.suite.manifest import (
     ManifestStore,
@@ -99,6 +103,7 @@ class ValidationJob:
                 partition_by=suite.partition_by, settings=suite.settings,
             )
 
+        cur_schema = {f.name: f.dataType.simpleString() for f in clips.schema.fields}
         completed: list[str] = []
         prev = None
         resume_rejected: str | None = None
@@ -115,12 +120,18 @@ class ValidationJob:
                 # the carried verdicts describe different data — fall back
                 # to a full run rather than merge stale partitions
                 prev_schema = prev.input_lineage.get("schema")
-                cur_schema_chk = {
-                    f.name: f.dataType.simpleString() for f in clips.schema.fields
-                }
-                if prev_schema is not None and prev_schema != cur_schema_chk:
+                if prev_schema is not None and prev_schema != cur_schema:
                     completed = []
                     resume_rejected = "schema_changed_since_crashed_run"
+        prior, prior_errors = (
+            self._read_prior(clips.sparkSession, prev.run_id)
+            if completed else ({}, {})
+        )
+        if "verdicts" in prior_errors:
+            # a skipped partition whose verdicts cannot be carried would
+            # have none at all: validate everything instead
+            completed = []
+            resume_rejected = "prior_verdicts_unreadable"
         m = self.manifests.start_run(suite, input_files=input_files)
         if _merge_prev is not None and prev is not None:
             m.input_lineage["incremental_from_run"] = prev.run_id
@@ -142,7 +153,6 @@ class ValidationJob:
         # against the last COMPLETE run's, so a snapshot that silently
         # gained/lost/re-typed a column shows in the manifest trail even when
         # every value-level check still passes (pure metadata, no Spark job)
-        cur_schema = {f.name: f.dataType.simpleString() for f in clips.schema.fields}
         m.input_lineage["schema"] = cur_schema
         base_m = (
             prev if (prev is not None and prev.status == "complete")
@@ -206,78 +216,29 @@ class ValidationJob:
             }
         run_sec = time.perf_counter() - t_run
 
-        # Merge the prior (crashed) run's per-partition verdicts for the
-        # partitions this run skipped, so a resumed run's verdict table has
-        # FULL coverage of the input, not just the remainder. Global
-        # ("__global__") verdicts are recomputed on the full input by the
-        # runner and are never merged from the prior run.
-        if completed and prev is not None:
-            from doc_quality_check_spark.suite.runner import VERDICT_SCHEMA
-
-            # table-level checks ALWAYS recompute on the full input — their
-            # verdicts must not also merge from the prior run (per-partition
-            # drift rows carry real part_keys and would duplicate otherwise).
-            # From the UNPRUNED suite: a check pruned THIS run (no baseline/
-            # catalog passed) must not sneak stale verdicts in via the merge.
-            table_cids = {
+        # Carry the prior run's verdict and violation rows forward for the
+        # skipped partitions, so the result tables cover the FULL input.
+        # Never carried: table-level checks (always recomputed on the full
+        # input; taken from the UNPRUNED suite so a check pruned THIS run
+        # cannot sneak stale rows in) and version-changed or removed ones.
+        if completed:
+            drop = sorted(revalidate | {
                 c.constraint_id for c in self.suite.checks if not c.is_row_level
-            }
-            prior_rows = []
-            for pk in completed:
-                for cid, v in prev.partitions.get(pk, {}).get("checks", {}).items():
-                    # version-changed / added / removed constraints never
-                    # carry forward: changed ones were just recomputed by the
-                    # revalidation pass above, removed ones no longer exist
-                    if cid in table_cids or cid in revalidate:
-                        continue
-                    prior_rows.append((
-                        pk, cid,
-                        None if v.get("n_rows") is None else int(v["n_rows"]),
-                        None if v.get("n_violations") is None else int(v["n_violations"]),
-                        v.get("passed"),
-                        None if v.get("metric_value") is None else float(v["metric_value"]),
-                    ))
-            if prior_rows:
-                prior_df = clips.sparkSession.createDataFrame(prior_rows, VERDICT_SCHEMA)
-                res.verdicts = res.verdicts.unionByName(prior_df)
-            # Merge the prior run's VIOLATION rows for the skipped partitions
-            # too (violations carry part_key since round 2), so the resumed
-            # run's violations table backs every merged verdict. If the prior
-            # run crashed before its violations parquet was written, only the
-            # manifest's verdict metrics survive — recorded, not invented.
-            prev_viol = os.path.join(
-                self.out_dir, f"run_{prev.run_id:06d}", "violations")
-            if os.path.isdir(prev_viol):
-                from py4j.protocol import Py4JJavaError
-                from pyspark.errors import AnalysisException
-                from pyspark.sql import functions as F
-
-                try:
-                    pv = clips.sparkSession.read.parquet(prev_viol)
-                except (AnalysisException, Py4JJavaError) as exc:
-                    # a write cut short leaves no data file (only
-                    # _temporary/: AnalysisException, schema not inferable)
-                    # or a file that is not parquet (the footer read fails:
-                    # Py4JJavaError) — merge nothing and say so
-                    m.input_lineage["prior_violations_merge_skipped"] = {
-                        "run_id": prev.run_id,
-                        "error": type(exc).__name__,
-                    }
-                else:
-                    if "part_key" in pv.columns:
-                        keep = pv.filter(F.col("part_key").isin(completed))
-                        if revalidate:
-                            # changed-version constraints' violation rows
-                            # were recomputed by the revalidation pass
-                            keep = keep.filter(
-                                ~F.col("constraint_id").isin(list(revalidate))
-                            )
-                        res.violations = res.violations.unionByName(
-                            keep.select(*res.violations.columns)
-                        )
+            })
+            if "violations" in prior_errors:   # recorded, not invented
+                m.input_lineage["prior_violations_merge_skipped"] = {
+                    "run_id": prev.run_id,
+                    "error": prior_errors["violations"],
+                }
+            for name, df in prior.items():
+                keep = df.filter(F.col("part_key").isin(completed))
+                if drop:
+                    keep = keep.filter(~F.col("constraint_id").isin(drop))
+                cur = getattr(res, name)
+                setattr(res, name, cur.unionByName(keep.select(*cur.columns)))
 
         # materialize result tables (violations first: triggers the cached
-        # metrics pass), then record per-partition metrics in the manifest.
+        # metrics pass), then record partitions + verdicts path in the manifest.
         # Each lazy plan is computed exactly once, by its write: from here on
         # the written parquet IS the result, and every later sink (verdict
         # rows, summary, violation sample, quarantine) reads it instead of
@@ -300,6 +261,7 @@ class ValidationJob:
             # pinning a payload-decoded cache of the carried-forward
             # partitions for the application lifetime
             sub_res.unpersist()
+        m.verdicts_path = verd_path
         self.manifests.record_partitions(m, verdict_rows)
         # per-operator timing in the manifest — the reference returns wall
         # time with every metric (clarity_check.py:21,37; SURVEY.md F20)
@@ -364,6 +326,23 @@ class ValidationJob:
             cached.unpersist()
         res.extra_caches = []
         return JobResult(manifest=m, result=res, report_paths=paths)
+
+    def _read_prior(self, spark, run_id: int) -> tuple[dict, dict]:
+        """Run ``run_id``'s verdict and violation tables by name, and the
+        error class of each that cannot be read: a write cut short leaves
+        only _temporary/ (AnalysisException) or a non-parquet file
+        (Py4JJavaError)."""
+        from py4j.protocol import Py4JJavaError
+        from pyspark.errors import AnalysisException
+
+        tables, errors = {}, {}
+        for name in ("verdicts", "violations"):
+            path = os.path.join(self.out_dir, f"run_{run_id:06d}", name)
+            try:
+                tables[name] = spark.read.parquet(path)
+            except (AnalysisException, Py4JJavaError) as exc:
+                errors[name] = type(exc).__name__
+        return tables, errors
 
     # ------------------------------------------------------------------
     def resolve_baseline(self, spark, ref: str):

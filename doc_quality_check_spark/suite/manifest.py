@@ -6,9 +6,10 @@ naming (/root/reference/test_readability.py:963-1004,
 docs/REPORT_FOLDER_FEATURE.md:11-34). The engine extends that into a real
 checkpoint manifest (north rule): one JSON per run recording run_id,
 timestamp, input lineage (snapshot id analog: the parquet/Iceberg file list
-fingerprint), the constraint-id→version map, and per-partition status +
-metrics — so a restarted run anti-joins completed partitions and validates
-only the remainder.
+fingerprint), the constraint-id→version map, per-partition status, the
+table-level ``__global__`` verdicts, and the path of the run's verdict
+parquet — the only store of per-partition metrics — so a restarted run
+anti-joins completed partitions and validates only the remainder.
 """
 
 from __future__ import annotations
@@ -46,8 +47,9 @@ class RunManifest:
     suite_name: str
     constraint_versions: dict[str, str]
     input_lineage: dict = field(default_factory=dict)
-    partitions: dict[str, dict] = field(default_factory=dict)  # part_key -> {status, metrics}
+    partitions: dict[str, dict] = field(default_factory=dict)  # part_key -> {status}
     status: str = "running"
+    verdicts_path: str | None = None  # the run's verdict parquet, once written
 
     def to_json(self) -> str:
         return json.dumps(self.__dict__, indent=2, sort_keys=True)
@@ -94,40 +96,39 @@ class ManifestStore:
             fh.write(m.to_json())
         os.replace(tmp, self.path_for(m.run_id))
 
-    def load(self, run_id: int) -> RunManifest:
-        with open(self.path_for(run_id)) as fh:
+    @staticmethod
+    def _read(path: str) -> RunManifest:
+        with open(path) as fh:
             return RunManifest(**json.load(fh))
+
+    def load(self, run_id: int) -> RunManifest:
+        return self._read(self.path_for(run_id))
 
     def latest(self) -> RunManifest | None:
         paths = self._paths()
-        if not paths:
-            return None
-        with open(paths[-1]) as fh:
-            return RunManifest(**json.load(fh))
+        return self._read(paths[-1]) if paths else None
 
     def latest_complete(self) -> RunManifest | None:
         """Most recent run that finished — the carry-forward base for
         incremental re-validation (a crashed run's partial verdicts are
         resumed by run(), never diffed against)."""
         for path in reversed(self._paths()):
-            with open(path) as fh:
-                m = RunManifest(**json.load(fh))
+            m = self._read(path)
             if m.status == "complete":
                 return m
         return None
 
     # ------------------------------------------------------------------
     def record_partitions(self, m: RunManifest, verdicts_rows: list[dict]) -> None:
-        """Mark partitions complete with their verdict metrics."""
+        """Mark partitions complete; keep only the ``__global__`` verdicts'
+        metrics (per-partition ones stay in ``m.verdicts_path``)."""
         for r in verdicts_rows:
-            pk = r["part_key"]
-            part = m.partitions.setdefault(pk, {"status": "complete", "checks": {}})
-            part["checks"][r["constraint_id"]] = {
-                "n_rows": r.get("n_rows"),
-                "n_violations": r.get("n_violations"),
-                "passed": r.get("passed"),
-                "metric_value": r.get("metric_value"),
-            }
+            part = m.partitions.setdefault(r["part_key"], {"status": "complete"})
+            if r["part_key"] == "__global__":
+                part.setdefault("checks", {})[r["constraint_id"]] = {
+                    k: r.get(k)
+                    for k in ("n_rows", "n_violations", "passed", "metric_value")
+                }
         self.save(m)
 
     def completed_partitions(self, m: RunManifest) -> list[str]:

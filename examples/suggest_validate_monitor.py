@@ -6,9 +6,10 @@ validation on an unknown table:
 
   1. ``suggest_suite`` profiles today's data and writes a declarative suite
      (numeric ranges stamped severity='warn' — advisory until reviewed);
-  2. ``ValidationJob`` runs that suite per batch, recording per-partition
-     verdict metrics into the run manifest (the metric repository);
-  3. ``detect_anomaly`` watches the manifest trail and flags the first run
+  2. ``ValidationJob`` runs that suite per batch, writing per-partition
+     verdict metrics to each run's verdict table (the metric repository,
+     indexed by the run manifests);
+  3. ``detect_anomaly`` watches that trail and flags the first run
      whose metrics leave the historical band — catching the regressions a
      static threshold suite cannot express.
 

@@ -99,8 +99,9 @@ def test_job_resume_skips_completed_partitions(spark, clips_dir, tmp_path):
     job.manifests.save(m1)
 
     # run 2 resumes: completed partitions are NOT re-validated (their
-    # verdicts come from the prior run's manifest), but the final verdict
-    # table covers EVERY partition of the input — including the skipped ones.
+    # verdicts carry forward from the prior run's verdict table), but the
+    # final verdict table covers EVERY partition of the input — including
+    # the skipped ones.
     jr2 = job.run(clips, payload=False, resume=True)
     assert jr2.manifest.run_id == m1.run_id + 1
     assert jr2.manifest.input_lineage["resumed_from_partitions"] == sorted(done)
@@ -114,16 +115,17 @@ def test_job_resume_skips_completed_partitions(spark, clips_dir, tmp_path):
     }
     assert all_parts <= parts          # full coverage, merged prior verdicts
     assert set(done) <= parts
-    # merged rows carry the prior run's metrics verbatim
-    merged = {
-        (r["part_key"], r["constraint_id"]): r
-        for r in jr2.result.verdicts.filter(F.col("part_key").isin(done)).collect()
-    }
-    for pk in done:
-        for cid, v in m1.partitions[pk]["checks"].items():
-            r = merged[(pk, cid)]
-            assert r["n_violations"] == v["n_violations"]
-            assert r["passed"] == v["passed"]
+    # merged rows carry the prior run's verdict rows verbatim
+    fields = ["part_key", "constraint_id", "n_rows", "n_violations",
+              "passed", "metric_value"]
+
+    def done_rows(df):
+        return sorted(tuple(r) for r in
+                      df.filter(F.col("part_key").isin(done)).select(fields).collect())
+
+    prior = done_rows(spark.read.parquet(
+        os.path.join(out, f"run_{m1.run_id:06d}", "verdicts")))
+    assert prior and done_rows(jr2.result.verdicts) == prior
     # global table checks ran on the FULL input (not the pending remainder)
     uniq = [r for r in jr2.result.verdicts.collect()
             if r["part_key"] == GLOBAL_PART and r["constraint_id"] == "clip_id_unique"]
@@ -132,8 +134,7 @@ def test_job_resume_skips_completed_partitions(spark, clips_dir, tmp_path):
     # violations table must back every merged verdict)
     viol_parts = {r["part_key"] for r in
                   jr2.result.violations.select("part_key").distinct().collect()}
-    merged_nv = {pk: sum(c["n_violations"] for c in m1.partitions[pk]["checks"].values())
-                 for pk in done}
+    merged_nv = {pk: sum(r[3] for r in prior if r[0] == pk) for pk in done}
     for pk, nv in merged_nv.items():
         if nv > 0:
             assert pk in viol_parts
@@ -179,12 +180,130 @@ def test_job_resume_skips_unreadable_prior_violations(
     assert lineage["prior_violations_merge_skipped"] == {
         "run_id": m1.run_id, "error": error,
     }
-    # the skipped partitions' verdicts still merged from the manifest; no
-    # violation row of theirs could be carried
+    # the skipped partitions' verdicts still merged from the prior verdict
+    # table; no violation row of theirs could be carried
     parts = {r["part_key"] for r in
              jr2.result.verdicts.select("part_key").distinct().collect()}
     assert set(done) <= parts
     assert jr2.result.violations.filter(F.col("part_key").isin(done)).count() == 0
+
+
+@pytest.mark.parametrize("mode", ["resume", "incremental"])
+@pytest.mark.parametrize("leftover", [
+    "part-00000.snappy.parquet",                # not parquet bytes
+    "_temporary/0/part-00000.snappy.parquet",   # a write cut short
+])
+def test_job_rejects_unreadable_prior_verdicts(
+        spark, clips_dir, tmp_path, mode, leftover):
+    """A resume or incremental run whose prior verdict table cannot be read
+    would skip partitions it cannot carry: it falls back to a full run,
+    records why, and re-validates every partition."""
+    import shutil
+
+    out = str(tmp_path / "job_bad_verdicts")
+    clips = load_clips(spark, clips_dir).drop("bytes").limit(800)
+    job = ValidationJob(_suite(), out)
+    jr1 = job.run(clips, payload=False, formats=())
+    want = sorted(map(tuple, jr1.result.verdicts.collect()))
+    if mode == "resume":
+        m1 = job.manifests.load(jr1.manifest.run_id)
+        done = [pk for pk in m1.partitions if pk != GLOBAL_PART][:2]
+        m1.partitions = {pk: m1.partitions[pk] for pk in done}
+        m1.status = "running"
+        job.manifests.save(m1)
+    verd = os.path.join(out, f"run_{jr1.manifest.run_id:06d}", "verdicts")
+    shutil.rmtree(verd)
+    os.makedirs(os.path.dirname(os.path.join(verd, leftover)))
+    with open(os.path.join(verd, leftover), "wb") as fh:
+        fh.write(b"this is not a parquet file")
+
+    if mode == "resume":
+        jr2 = job.run(clips, payload=False, resume=True)
+    else:
+        jr2 = job.run_incremental(clips, clips, payload=False)
+    assert jr2.manifest.status == "complete"
+    lineage = jr2.manifest.input_lineage
+    assert lineage["resume_rejected"] == "prior_verdicts_unreadable"
+    assert "resumed_from_partitions" not in lineage
+    all_parts = {r["part_key"] for r in
+                 clips.select("part_key").distinct().collect()}
+    checked = {r["part_key"] for r in
+               jr2.result.checked.select("part_key").distinct().collect()}
+    assert checked == all_parts        # nothing skipped
+    assert sorted(map(tuple, jr2.result.verdicts.collect())) == want
+
+
+def test_job_manifest_holds_no_partition_metrics(spark, clips_dir, tmp_path):
+    """The verdict parquet is the only store of per-partition metrics: no
+    saved manifest entry but ``__global__`` has checks, and the manifest
+    records the verdict table's path."""
+    out = str(tmp_path / "job_shape")
+    clips = load_clips(spark, clips_dir).drop("bytes").limit(400)
+    job = ValidationJob(_suite(), out)
+    jr = job.run(clips, payload=False, formats=())
+    with open(job.manifests.path_for(jr.manifest.run_id)) as fh:
+        m = json.load(fh)
+    parts = m["partitions"]
+    assert len(parts) > 1
+    assert [pk for pk, v in parts.items() if "checks" in v] == [GLOBAL_PART]
+    assert set(parts[GLOBAL_PART]["checks"]) == {"clip_id_unique"}
+    assert all(v == {"status": "complete"}
+               for pk, v in parts.items() if pk != GLOBAL_PART)
+    assert m["verdicts_path"] == os.path.join(out, "run_000001", "verdicts")
+    assert spark.read.parquet(m["verdicts_path"]).count() \
+        == jr.result.verdicts.count()
+
+
+def test_metric_history_per_partition_from_verdict_tables(
+        spark, clips_dir, tmp_path):
+    """A per-partition trail from real runs: metric_history reads each
+    run's verdict parquet, detect_anomaly flags the one degraded partition,
+    and neither starts a Spark job."""
+    from doc_quality_check_spark.suite.history import (
+        detect_anomaly, load_manifests, metric_history,
+    )
+
+    out = str(tmp_path / "job_history")
+    clips = load_clips(spark, clips_dir).drop("bytes")
+    job = ValidationJob(_suite(), out)
+    parts = sorted(r["part_key"] for r in
+                   clips.select("part_key").distinct().collect())
+    victim = parts[0]
+    for run in range(4):
+        batch = clips.filter(F.pmod(F.crc32("clip_id"), F.lit(4)) == run)
+        if run == 3:   # the regression: one partition's durations 100x
+            batch = batch.withColumn("dur_ms", F.when(
+                F.col("part_key") == victim, F.col("dur_ms") * 100,
+            ).otherwise(F.col("dur_ms")))
+        job.run(batch, payload=False, resume=False, formats=())
+
+    want = {}
+    for man in load_manifests(job.manifests):
+        for r in spark.read.parquet(man["verdicts_path"]).filter(
+                F.col("constraint_id") == "dur_range").collect():
+            want.setdefault(r["part_key"], []).append(
+                (int(man["run_id"]), r["metric_value"]))
+    assert set(want) == set(parts)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("history-probe", "history-probe")
+    try:
+        trails = {pk: metric_history(job.manifests, "dur_range", part_key=pk)
+                  for pk in parts}
+        verdicts = {pk: detect_anomaly(job.manifests, "dur_range",
+                                       part_key=pk, min_history=2)
+                    for pk in parts}
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("history-probe")) == []
+
+    assert trails == {pk: sorted(v) for pk, v in want.items()}
+    assert all(len(t) == 4 for t in trails.values())
+    assert {pk for pk, v in verdicts.items() if v.is_anomaly} == {victim}
+    assert verdicts[victim].run_id == 4
+    assert verdicts[victim].value > verdicts[victim].mean
 
 
 def test_job_resume_global_checks_span_partitions(spark, clips_dir, tmp_path):
