@@ -23,13 +23,12 @@ and per-row work is numpy-vectorized over the sample arrays — no per-row
 Python object churn in the hot path (north rule).
 
 Synthesis (`synth_clip_bytes`) exists for deterministic fixtures only
-(FIXTURES.md §1): RIFF/WAV PCM16 + PCM-U8 (and, round 5, G.711
-mu-law/A-law, IEEE float, PCM24, IMA ADPCM, native FLAC via the
-'flac_native' label) are real encodings; the legacy 'flac' label keeps
-the deliberately fake-but-deterministic container (magic b'fLaC' + raw
-PCM16) for byte-stable golden fixtures — REAL native FLAC streams decode
-for real through functions/flac.py (from-scratch Rice/FIXED/LPC decoder
-with CRC verification), content-routed in decode_payload.
+(FIXTURES.md §1). Every label is a real encoding: RIFF/WAV PCM16, PCM-U8,
+G.711 mu-law/A-law, IEEE float, PCM24 and IMA ADPCM, and native FLAC
+(functions/flac.py) for both 'flac' and 'flac_native'. The 'flac' label
+encodes the truncated int16 samples the PCM16 WAV writer stores, so it
+decodes to the same PCM; 'flac_native' rounds to nearest. decode_payload
+sends FLAC to functions/flac.py and everything else to the WAV parser.
 """
 
 from __future__ import annotations
@@ -51,11 +50,15 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from doc_quality_check_spark.functions.flac import (
+    FLAC_MAGIC,
+    decode_flac,
+    encode_flac,
+)
+
 # ---------------------------------------------------------------------------
 # Deterministic synthesis (fixtures only)
 # ---------------------------------------------------------------------------
-
-_FAKE_FLAC_MAGIC = b"fLaC"
 
 
 def synth_pcm(seed: int, sr_hz: int, dur_ms: int, silent: bool = False) -> np.ndarray:
@@ -351,15 +354,6 @@ def _decode_ima_adpcm(data: bytes, block_align: int, n_samples: int | None):
     return pcm
 
 
-def encode_fake_flac(pcm: np.ndarray, sr_hz: int) -> bytes:
-    """Deterministic FAKE container (no real FLAC lib in this environment).
-
-    Layout: b'fLaC' | uint32 sr | uint32 n_samples | raw little-endian int16.
-    """
-    data = (np.clip(pcm, -1, 1) * 32767.0).astype("<i2").tobytes()
-    return _FAKE_FLAC_MAGIC + struct.pack("<II", sr_hz, len(data) // 2) + data
-
-
 def synth_clip_bytes(
     seed: int,
     sr_hz: int,
@@ -376,7 +370,10 @@ def synth_clip_bytes(
     if codec == "pcm_u8":
         raw = encode_wav_pcmu8(pcm, enc_sr)
     elif codec == "flac":
-        raw = encode_fake_flac(pcm, enc_sr)
+        # the PCM16 WAV writer's truncated int16 grid, losslessly in FLAC
+        raw = encode_flac(
+            (np.clip(pcm, -1, 1) * 32767.0).astype("<i2") / 32767.0, enc_sr
+        )
     elif codec == "mulaw":
         raw = encode_wav_mulaw(pcm, enc_sr)
     elif codec == "alaw":
@@ -388,8 +385,6 @@ def synth_clip_bytes(
     elif codec == "adpcm_ima_wav":
         raw = encode_wav_ima_adpcm(pcm, enc_sr)
     elif codec == "flac_native":
-        from doc_quality_check_spark.functions.flac import encode_flac
-
         raw = encode_flac(pcm, enc_sr)
     else:  # pcm_s16le and any unknown label default to WAV16
         raw = encode_wav_pcm16(pcm, enc_sr)
@@ -488,46 +483,18 @@ def _parse_wav(buf: bytes):
     return int(sr), pcm
 
 
-def _parse_fake_flac(buf: bytes):
-    if len(buf) < 12 or buf[0:4] != _FAKE_FLAC_MAGIC:
-        raise ValueError("not a fLaC stream")
-    sr, n = struct.unpack_from("<II", buf, 4)
-    data = buf[12 : 12 + 2 * n]
-    if len(data) < 2 * n:
-        raise ValueError("truncated fLaC payload")
-    pcm = np.frombuffer(data, dtype="<i2").astype(np.float32) / 32767.0
-    return int(sr), pcm
-
-
-def _is_real_flac(b: bytes) -> bool:
-    """Real native FLAC vs the fixture's fake container, distinguished by
-    the STREAMINFO block header (type 0 + 24-bit BE length 34) — the same
-    byte-exact test the header probe uses."""
-    return (
-        len(b) >= 8
-        and b[:4] == _FAKE_FLAC_MAGIC
-        and (b[4] & 0x7F) == 0
-        and b[5:8] == b"\x00\x00\x22"
-    )
-
-
 def decode_payload(buf, codec: str):
     """bytes → (sr, pcm). Dispatches on codec label with container sniffing
     as fallback (the reference's mode-dispatcher analog,
-    confidence_check.py:421-455). 'fLaC' payloads route by content: real
-    native FLAC streams (round 5, functions/flac.py — full Rice/FIXED/LPC
-    decoder with CRC verification) vs the deterministic fake fixture
-    container."""
+    confidence_check.py:421-455): the 'flac' label or a 'fLaC' magic goes
+    to the native FLAC decoder (functions/flac.py — Rice/FIXED/LPC with
+    CRC verification), everything else to the RIFF/WAV parser."""
     if buf is None or len(buf) == 0:
         # empty-input default row semantics (document_processor.py:126-134)
         return 0, np.zeros(0, dtype=np.float32)
     b = bytes(buf)
-    if codec == "flac" or b[:4] == _FAKE_FLAC_MAGIC:
-        if _is_real_flac(b):
-            from doc_quality_check_spark.functions.flac import decode_flac
-
-            return decode_flac(b)
-        return _parse_fake_flac(b)
+    if codec == "flac" or b[:4] == FLAC_MAGIC:
+        return decode_flac(b)
     return _parse_wav(b)
 
 
@@ -752,28 +719,24 @@ def _probe_header(buf) -> tuple[bool, int, float]:
 
     Containers probed, all byte-exact per their public specs:
     - RIFF/WAVE fmt chunk (sr at offset 24, LE)
-    - REAL FLAC: 'fLaC' magic + STREAMINFO metadata block (block type 0,
-      34-byte body; sr is a 20-bit big-endian field at body offset 10) —
-      distinguished from the fixture's fake container by the block header:
-      real streams carry length bytes 00 00 22, the fake layout puts the
-      LE sample rate there.
+    - FLAC: 'fLaC' magic + STREAMINFO metadata block (block type 0,
+      24-bit BE length 34; sr is a 20-bit big-endian field at body
+      offset 10).
     - Ogg Vorbis: 'OggS' page + the identification packet ('\\x01vorbis',
       channels u8 + sr u32-LE after the version word).
     """
     if buf is None or len(buf) == 0:
         return False, 0, 0.0
     b = bytes(buf[:64])
-    if b[:4] == _FAKE_FLAC_MAGIC and len(b) >= 12:
-        # real-FLAC STREAMINFO block header: last-flag bit + type 0, then
-        # 24-bit BE length 34
-        if len(b) >= 21 and (b[4] & 0x7F) == 0 and b[5:8] == b"\x00\x00\x22":
-            sr = (b[18] << 12) | (b[19] << 4) | (b[20] >> 4)
-            # failed probe (zero sr field) reports 0.0 like every other
-            # reject path — a consumer reading hdr_conf alone must not see
-            # a confident pass
-            return sr > 0, int(sr), 50.0 if sr > 0 else 0.0
-        (sr,) = struct.unpack_from("<I", b, 4)
-        return True, int(sr), 50.0
+    # STREAMINFO block header: last-flag bit + type 0, then 24-bit BE
+    # length 34
+    if (b[:4] == FLAC_MAGIC and len(b) >= 21 and (b[4] & 0x7F) == 0
+            and b[5:8] == b"\x00\x00\x22"):
+        sr = (b[18] << 12) | (b[19] << 4) | (b[20] >> 4)
+        # failed probe (zero sr field) reports 0.0 like every other reject
+        # path — a consumer reading hdr_conf alone must not see a
+        # confident pass
+        return sr > 0, int(sr), 50.0 if sr > 0 else 0.0
     if len(b) >= 36 and b[0:4] == b"RIFF" and b[8:12] == b"WAVE" and b[12:16] == b"fmt ":
         (sr,) = struct.unpack_from("<I", b, 24)
         return True, int(sr), 50.0

@@ -32,10 +32,10 @@ from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 from doc_quality_check_spark.functions.audio import (
     _SILENCE_THR,
     decode_payload,
-    encode_fake_flac,
     encode_wav_pcm16,
     encode_wav_pcmu8,
 )
+from doc_quality_check_spark.functions.flac import encode_flac
 
 AUDIT_FIELDS = [
     StructField("gain_db", DoubleType()),
@@ -47,12 +47,7 @@ AUDIT_FIELDS = [
 def _encode(pcm: np.ndarray, sr: int, codec: str) -> bytes:
     if codec == "pcm_u8":
         return encode_wav_pcmu8(pcm, sr)
-    if codec == "flac":
-        return encode_fake_flac(pcm, sr)
-    if codec == "flac_native":
-        # real native FLAC (round 5): lossless output container
-        from doc_quality_check_spark.functions.flac import encode_flac
-
+    if codec in ("flac", "flac_native"):
         return encode_flac(pcm, sr)
     return encode_wav_pcm16(pcm, sr)
 

@@ -1,9 +1,8 @@
-"""From-scratch REAL FLAC codec (stdlib + numpy), no audio libraries.
-
-Until round 5 the engine's "flac" payloads were a deterministic FAKE
-container (audio.py encode_fake_flac — magic + raw PCM16), honestly
-declared. This module adds the real thing, built from the public FLAC
-format specification (xiph.org / RFC 9639):
+"""From-scratch REAL FLAC codec (stdlib + numpy), no audio libraries,
+built from the public FLAC format specification (xiph.org / RFC 9639).
+It is the engine's one FLAC path: the fixtures' 'flac' and 'flac_native'
+labels both encode with it, and decode_payload decodes every 'fLaC'
+payload with it.
 
 - :func:`decode_flac`: full native-FLAC decoder — STREAMINFO + metadata
   walk, frame sync with CRC-8-verified headers, UTF-8-coded frame/sample
@@ -19,7 +18,8 @@ format specification (xiph.org / RFC 9639):
   fixed blocking): per frame it picks the cheapest FIXED predictor order
   0-2 and Rice-codes the residual (single partition), with correct CRC-8
   header and CRC-16 frame checksums — any conformant FLAC decoder can
-  play its output.
+  play its output. The Rice writer builds each partition's bits with
+  numpy and packs them whole.
 
 The decoder is vectorized: no Python loop runs per bit. A Rice partition
 decodes whole from one unpacked window of the stream (its stop bits are
@@ -490,11 +490,16 @@ class _BitWriter:
             self.out.append((self.cur >> self.n) & 0xFF)
         self.cur &= (1 << self.n) - 1
 
-    def unary(self, q: int) -> None:
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)  # q zeros then a one
+    def bits(self, b: np.ndarray) -> None:
+        """Append a 0/1 uint8 array, MSB-first: whole bytes pack at once,
+        the last partial byte stays pending."""
+        b = np.concatenate([(self.cur >> np.arange(self.n - 1, -1, -1)) & 1,
+                            b]).astype(np.uint8)
+        whole = len(b) & ~7
+        self.out += np.packbits(b[:whole]).tobytes()
+        self.cur, self.n = 0, len(b) - whole
+        for x in b[whole:]:
+            self.cur = (self.cur << 1) | int(x)
 
     def flush(self) -> None:
         if self.n:
@@ -536,11 +541,16 @@ def _write_rice_residual(wr: _BitWriter, resid: np.ndarray) -> None:
     wr.write(0, 2)  # rice method (4-bit params)
     wr.write(0, 4)  # partition order 0
     wr.write(k, 4)
-    for v in zig:
-        v = int(v)
-        wr.unary(v >> k)
-        if k:
-            wr.write(v & ((1 << k) - 1), k)
+    # each code is q = v >> k zeros, a stop bit, then v's low k bits
+    q = zig >> k
+    stop = np.cumsum(q + (k + 1)) - (k + 1)
+    bits = np.zeros(int(stop[-1]) + k + 1, np.uint8)
+    bits[stop] = 1
+    if k:
+        bits[stop[:, None] + np.arange(1, k + 1)] = (
+            zig[:, None] >> np.arange(k - 1, -1, -1)
+        ) & 1
+    wr.bits(bits)
 
 
 def _encode_channel(

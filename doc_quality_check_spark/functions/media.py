@@ -16,8 +16,6 @@ provides the Spark-side plumbing — typed metadata schema, Arrow-batched
   all seven Annex-H predictors, restart markers) — every DCT-based T.81
   mode plus Huffman lossless. Only arithmetic-lossless (SOF11) and
   hierarchical modes raise NotImplementedError → in-band error rows.
-- ``FAKEIMG`` (magic + width + height + raw grayscale bytes) remains as the
-  deterministic fixture format.
 - VIDEO: YUV4MPEG2 (Y4M) streams decode for real (stdlib parser —
   ``decode_y4m``/``encode_y4m``), and so does COMPRESSED video via
   MJPEG-in-AVI (``decode_avi_mjpeg`` — RIFF container parse + the real
@@ -41,6 +39,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -49,27 +48,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-FAKEIMG_MAGIC = b"FIMG"
-
-IMAGE_META_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("decode_ok", BooleanType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("ink_ratio", DoubleType()),
-        StructField("error", StringType()),
-    ]
-)
-
-
-def encode_fake_image(seed: int, width: int, height: int) -> bytes:
-    """Deterministic fake grayscale image (fixtures only)."""
-    rng = np.random.default_rng(seed)
-    pixels = rng.integers(0, 256, size=width * height, dtype=np.uint8)
-    return FAKEIMG_MAGIC + struct.pack("<II", width, height) + pixels.tobytes()
-
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
@@ -319,12 +297,6 @@ def _decode_one(buf: bytes) -> tuple[int, int, np.ndarray]:
     if buf is None or len(buf) == 0:
         return 0, 0, np.zeros(0, dtype=np.uint8)  # empty-input default row
     b = bytes(buf)
-    if b[:4] == FAKEIMG_MAGIC:
-        w, h = struct.unpack_from("<II", b, 4)
-        px = np.frombuffer(b[12 : 12 + w * h], dtype=np.uint8)
-        if px.size < w * h:
-            raise ValueError("truncated FAKEIMG payload")
-        return int(w), int(h), px
     if b[:8] == PNG_MAGIC:
         return decode_png(b)
     if b[:2] == b"\xff\xd8":
@@ -335,38 +307,18 @@ def _decode_one(buf: bytes) -> tuple[int, int, np.ndarray]:
 
 
 def image_metrics(
-    df: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "bytes",
-    batch_size_hint: int = 64,
+    df: DataFrame, id_col: str = "media_id", payload_col: str = "bytes"
 ) -> DataFrame:
-    """mapInPandas decode → typed metadata rows; the payload never leaves
-    the scan stage (ink_ratio = fraction of pixels above the mean — the
-    reference's clarity metric shape, checks/clarity_check.py:11-38)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in IMAGE_META_SCHEMA.fields}
-            for mid, buf in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    w, h, px = _decode_one(buf)
-                    ink = float((px > px.mean()).mean()) if px.size else 0.0
-                    ok, err = True, None
-                except NotImplementedError as exc:
-                    w = h = 0
-                    ink, ok, err = 0.0, False, f"stub: {exc}"
-                except Exception as exc:  # in-band error row
-                    w = h = 0
-                    ink, ok, err = 0.0, False, str(exc)
-                out["media_id"].append(mid)
-                out["decode_ok"].append(ok)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["ink_ratio"].append(ink)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(gen, IMAGE_META_SCHEMA)
+    """(media_id, decode_ok, width, height, ink_ratio, error) per image: a
+    projection of :func:`with_image_metrics` over the id and payload
+    columns, so the payload never leaves the scan stage (ink_ratio =
+    fraction of pixels above the mean — the reference's clarity metric
+    shape, checks/clarity_check.py:11-38)."""
+    return with_image_metrics(df.select(id_col, payload_col), payload_col).select(
+        F.col(id_col).cast("string").alias("media_id"),
+        *(F.col(f"img_{c}").alias(c)
+          for c in ("decode_ok", "width", "height", "ink_ratio", "error")),
+    )
 
 
 # columns appended by with_image_metrics. suite/compiler.py's image row
@@ -549,31 +501,13 @@ def _y4m_plane(buf, offset, w, h, bits) -> np.ndarray:
     ).astype(np.uint8)
 
 
-def y4m_info(buf: bytes):
-    """(width, height, fps_num, fps_den, n_frames) without copying any
-    plane — the bounded-cost probe for sampling."""
-    w, h, fn, fd, _bits, _ysize, offsets = _y4m_frame_offsets(buf)
-    return w, h, fn, fd, len(offsets)
-
-
-def y4m_frame_planes(buf: bytes, indices) -> dict[int, np.ndarray]:
-    """Decode ONLY the requested frame indices → {index: luma plane}.
-    Memory stays bounded by len(indices), not stream length."""
-    w, h, _fn, _fd, bits, _ysize, offsets = _y4m_frame_offsets(buf)
-    return {
-        i: _y4m_plane(buf, offsets[i], w, h, bits)
-        for i in indices
-        if 0 <= i < len(offsets)
-    }
-
-
 def decode_y4m(buf: bytes):
     """Parse a YUV4MPEG2 stream → (width, height, fps_num, fps_den,
     [luma planes]). Stdlib-only; supports the C420*/C422/C444/Cmono chroma
     modes (chroma is skipped — the engine's metrics are luma-only).
     Unknown chroma tags raise NotImplementedError → in-band error rows.
-    Materializes EVERY frame; samplers should use :func:`y4m_info` +
-    :func:`y4m_frame_planes` for bounded cost."""
+    Materializes EVERY frame; samplers go through :func:`_open_video`
+    for bounded cost."""
     w, h, fn, fd, bits, _ysize, offsets = _y4m_frame_offsets(buf)
     frames = [_y4m_plane(buf, off, w, h, bits) for off in offsets]
     return w, h, fn, fd, frames
@@ -730,6 +664,25 @@ def decode_avi_mjpeg(buf: bytes):
     return int(w), int(h), fn, fd, frames
 
 
+def _open_video(b: bytes):
+    """Y4M or MJPEG-AVI bytes → (width, height, fps_num, fps_den, n_frames,
+    frame_luma), where ``frame_luma(i)`` decodes frame i alone and returns
+    its mean luma, so a caller pays only for the frames it picks; None for
+    any other container. Malformed containers raise (ValueError, or
+    NotImplementedError for an unsupported codec)."""
+    if b[:9] == Y4M_MAGIC:
+        w, h, fn, fd, bits, _ysize, offsets = _y4m_frame_offsets(b)
+        return w, h, fn, fd, len(offsets), lambda i: float(
+            _y4m_plane(b, offsets[i], w, h, bits).mean())
+    if b[:4] == AVI_MAGIC and b[8:12] == b"AVI ":
+        from doc_quality_check_spark.functions.jpeg import decode_jpeg
+
+        w, h, fn, fd, chunks = decode_avi_mjpeg(b)
+        return w, h, fn, fd, len(chunks), lambda i: float(
+            np.asarray(decode_jpeg(chunks[i])[2]).mean())
+    return None
+
+
 # columns appended by with_video_metrics. suite/compiler.py's video row
 # kinds read these; suite/runner.py triggers the video decode pass when any
 # check references one — the video twin of IMAGE_METRIC_COLUMNS.
@@ -772,8 +725,6 @@ def with_video_metrics(
     keep = [f.name for f in in_fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from doc_quality_check_spark.functions.jpeg import decode_jpeg
-
         for pdf in batches:
             oks, ws, hs, nfs, fpss, lumas, errs = [], [], [], [], [], [], []
             for buf in pdf[payload_col]:
@@ -782,23 +733,12 @@ def with_video_metrics(
                     False, 0, 0, 0, None, None, None,
                 )
                 try:
-                    if b[:9] == Y4M_MAGIC:
-                        w, h, fn, fd, nf = y4m_info(b)
+                    opened = _open_video(b)
+                    if opened is not None:
+                        w, h, fn, fd, nf, frame_luma = opened
                         fps = fn / fd
-                        idxs = sorted({0, nf // 2, nf - 1})
-                        planes = y4m_frame_planes(b, idxs)
-                        luma = float(
-                            np.mean([planes[i].mean() for i in idxs])
-                        )
-                        ok = True
-                    elif b[:4] == AVI_MAGIC and b[8:12] == b"AVI ":
-                        w, h, fn, fd, chunks = decode_avi_mjpeg(b)
-                        nf = len(chunks)
-                        fps = fn / fd
-                        idxs = sorted({0, nf // 2, nf - 1})
                         luma = float(np.mean([
-                            np.asarray(decode_jpeg(chunks[i])[2]).mean()
-                            for i in idxs
+                            frame_luma(i) for i in sorted({0, nf // 2, nf - 1})
                         ]))
                         ok = True
                     elif not b:
@@ -860,20 +800,17 @@ def video_frame_sample(
     every_ms: int = 1000,
 ) -> DataFrame:
     """Frame sampling over a video-bytes column, one row per sampled
-    timestamp. YUV4MPEG2 payloads decode FOR REAL (:func:`decode_y4m`),
-    and so do COMPRESSED MJPEG-AVI payloads (:func:`decode_avi_mjpeg` +
-    the real JPEG codec — only the sampled chunks are JPEG-decoded, so a
-    1-fps sample over a 30-fps stream pays 1/30th of the decode): the
-    sampled frame's luma stats and real dimensions come back, timestamps
-    derive from the stream's own fps, and a corrupt stream is an in-band
-    error row. Inter-frame containers (MP4/H.264 etc.) remain stubbed —
-    rows carry decode_ok=false + a stub error from the declared metadata
-    fan-out, but the shape, schema, and batch discipline are the
-    production ones (swap ffmpeg into the Y4M branch's place)."""
+    timestamp. YUV4MPEG2 and COMPRESSED MJPEG-AVI payloads decode FOR
+    REAL through :func:`_open_video`, which decodes only the sampled
+    frames (a 1-fps sample over a 30-fps AVI pays 1/30th of the JPEG
+    decode): the sampled frame's luma stats and real dimensions come back,
+    timestamps derive from the stream's own fps, and a corrupt stream is
+    an in-band error row. Inter-frame containers (MP4/H.264 etc.) remain
+    stubbed — rows carry decode_ok=false + a stub error from the declared
+    metadata fan-out, but the shape, schema, and batch discipline are the
+    production ones (swap ffmpeg into :func:`_open_video`)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from doc_quality_check_spark.functions.jpeg import decode_jpeg
-
         for pdf in batches:
             out = {k.name: [] for k in VIDEO_FRAME_SCHEMA.fields}
 
@@ -891,48 +828,22 @@ def video_frame_sample(
                 pdf[id_col], pdf[payload_col], pdf[dur_ms_col]
             ):
                 b = bytes(buf) if buf is not None else b""
-                if b[:9] == Y4M_MAGIC:
-                    try:
-                        w, h, fn, fd, nf = y4m_info(b)
+                try:
+                    opened = _open_video(b)
+                    if opened is not None:
+                        w, h, fn, fd, nf, frame_luma = opened
                         frame_ms = 1000.0 * fd / fn
-                        total_ms = nf * frame_ms
-                        n = max(1, int(total_ms) // every_ms)
-                        samples = [
-                            (float(i * every_ms),
-                             min(int(i * every_ms / frame_ms), nf - 1))
-                            for i in range(n)
-                        ]
-                        # decode ONLY the sampled planes (bounded cost)
-                        planes = y4m_frame_planes(
-                            b, {fi for _t, fi in samples}
-                        )
-                        for t, fi in samples:
-                            emit(mid, fi, t, True, w, h,
-                                 float(planes[fi].mean()), None)
-                    except NotImplementedError as exc:
-                        emit(mid, 0, 0.0, False, None, None, None,
-                             f"stub: {exc}")
-                    except Exception as exc:  # in-band error row
-                        emit(mid, 0, 0.0, False, None, None, None, str(exc))
-                    continue
-                if b[:4] == AVI_MAGIC and b[8:12] == b"AVI ":
-                    try:
-                        w, h, fn, fd, chunks = decode_avi_mjpeg(b)
-                        frame_ms = 1000.0 * fd / fn
-                        total_ms = len(chunks) * frame_ms
-                        n = max(1, int(total_ms) // every_ms)
+                        n = max(1, int(nf * frame_ms) // every_ms)
                         for i in range(n):
                             t = float(i * every_ms)
-                            fi = min(int(t / frame_ms), len(chunks) - 1)
-                            # indexed container: decode ONLY this frame
-                            _w, _h, luma = decode_jpeg(chunks[fi])
-                            emit(mid, fi, t, True, w, h,
-                                 float(np.asarray(luma).mean()), None)
-                    except NotImplementedError as exc:
-                        emit(mid, 0, 0.0, False, None, None, None,
-                             f"stub: {exc}")
-                    except Exception as exc:  # in-band error row
-                        emit(mid, 0, 0.0, False, None, None, None, str(exc))
+                            fi = min(int(t / frame_ms), nf - 1)
+                            emit(mid, fi, t, True, w, h, frame_luma(fi), None)
+                        continue
+                except NotImplementedError as exc:
+                    emit(mid, 0, 0.0, False, None, None, None, f"stub: {exc}")
+                    continue
+                except Exception as exc:  # in-band error row
+                    emit(mid, 0, 0.0, False, None, None, None, str(exc))
                     continue
                 n = max(1, int(dur) // every_ms) if dur and dur > 0 else 1
                 for i in range(n):

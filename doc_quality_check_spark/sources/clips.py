@@ -88,7 +88,7 @@ def generate_clips(out_dir: str, n_rows: int = 4000, seed: int = 42) -> str:
     marker file keyed on n_rows/seed)."""
     os.makedirs(out_dir, exist_ok=True)
     marker = os.path.join(out_dir, "_GENERATED.json")
-    key = {"n_rows": n_rows, "seed": seed, "v": 8}
+    key = {"n_rows": n_rows, "seed": seed, "v": 9}
     if os.path.exists(marker):
         with open(marker) as fh:
             if json.load(fh) == key:

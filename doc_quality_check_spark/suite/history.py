@@ -96,6 +96,7 @@ def detect_anomaly(
     k: float = 3.0,
     min_history: int = 3,
     max_relative_change: float | None = None,
+    manifests: list[dict] | None = None,
 ) -> AnomalyVerdict:
     """Flag the LATEST run's metric against the prior trail.
 
@@ -110,8 +111,10 @@ def detect_anomaly(
     manifest in the store does not carry the metric (constraint removed, or
     the run started but its partitions aren't recorded yet), no verdict is
     invented about a stale run: the result is non-anomalous with an
-    explicit reason, and ``run_id`` always names the run actually judged."""
-    manifests = load_manifests(store)
+    explicit reason, and ``run_id`` always names the run actually judged.
+    ``manifests`` reuses a :func:`load_manifests` result across calls."""
+    if manifests is None:
+        manifests = load_manifests(store)
     trail = metric_history(store, constraint_id, part_key, metric,
                            manifests=manifests)
     newest = int(manifests[-1]["run_id"]) if manifests else None

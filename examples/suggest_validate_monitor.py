@@ -70,7 +70,7 @@ def main() -> None:
         )
         verdicts = [
             detect_anomaly(job.manifests, "dur_ms_range", part_key=pk,
-                           min_history=2)
+                           manifests=manifests)
             for pk in parts
         ]
         fired = [v for v in verdicts if v.is_anomaly]

@@ -103,7 +103,7 @@ def test_transform_native_flac_roundtrip(spark):
     import numpy as np
 
     from doc_quality_check_spark.functions.audio import (
-        _is_real_flac,
+        _probe_header,
         decode_payload,
         synth_clip_bytes,
     )
@@ -119,7 +119,7 @@ def test_transform_native_flac_roundtrip(spark):
     out = transform_clips(df, target_dbfs=-20.0).collect()[0]
     assert out["transform_error"] is None
     got = bytes(out["bytes"])
-    assert _is_real_flac(got)
+    assert _probe_header(got) == (True, 8000, 50.0)  # fLaC + STREAMINFO
     sr, pcm = decode_payload(got, "flac_native")
     assert sr == 8000 and len(pcm) > 0
     # loudness actually moved toward the target

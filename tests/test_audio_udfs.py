@@ -219,12 +219,12 @@ def test_curation_metrics_and_clipping_check(spark):
 def test_header_probe_real_flac_and_ogg_vorbis():
     """Byte-exact header probes for REAL containers (no decode): FLAC
     STREAMINFO (20-bit BE sample-rate field), Ogg Vorbis identification
-    packet (LE u32 sr after '\\x01vorbis'), and disambiguation from the
-    fixture's fake fLaC layout."""
+    packet (LE u32 sr after '\\x01vorbis'), and the fixture's 'flac'
+    label, which is native FLAC."""
     import struct
 
     from doc_quality_check_spark.functions.audio import (
-        _probe_header, encode_fake_flac, synth_pcm,
+        _probe_header, synth_clip_bytes,
     )
 
     # real FLAC: fLaC | block hdr (last=1, type=0, len=34) | STREAMINFO
@@ -252,9 +252,9 @@ def test_header_probe_real_flac_and_ogg_vorbis():
         ok, got_sr, _ = _probe_header(ogg_vorbis(sr))
         assert (ok, got_sr) == (True, sr)
 
-    # fake container still parses through the legacy path
-    fake = encode_fake_flac(synth_pcm(1, 16000, 100), 16000)
-    assert _probe_header(fake) == (True, 16000, 50.0)
+    # the fixture's 'flac' label probes through STREAMINFO
+    fixture = synth_clip_bytes(1, 16000, 100, "flac")
+    assert _probe_header(fixture) == (True, 16000, 50.0)
     # and junk stays rejected
     assert _probe_header(b"OggSjunkjunkjunkjunkjunkjunkjunk")[0] is False
     assert _probe_header(b"\x00" * 40)[0] is False
@@ -410,14 +410,12 @@ def test_flac_native_lossless_roundtrip():
 
 
 def test_flac_native_through_engine(spark):
-    """Real-FLAC payloads route by CONTENT through decode_payload (the
-    fake fixture container shares the magic; STREAMINFO layout
-    disambiguates), the header probe reads the 20-bit sample-rate field,
-    and the Spark metrics pass treats native FLAC as first-class."""
+    """Real-FLAC payloads decode through decode_payload, the header probe
+    reads the 20-bit sample-rate field, and the Spark metrics pass treats
+    native FLAC as first-class."""
     from doc_quality_check_spark.functions.audio import (
         _probe_header,
         decode_payload,
-        encode_fake_flac,
         synth_clip_bytes,
         synth_pcm,
         with_audio_metrics,
@@ -426,12 +424,9 @@ def test_flac_native_through_engine(spark):
 
     pcm = synth_pcm(13, 16000, 500)
     real = encode_flac(pcm, 16000)
-    fake = encode_fake_flac(pcm, 16000)
     sr_r, dec_r = decode_payload(real, "flac")
-    sr_f, dec_f = decode_payload(fake, "flac")
-    assert sr_r == sr_f == 16000
-    # both containers carry the same int16 samples
-    assert np.allclose(dec_r, dec_f, atol=2e-4)
+    assert sr_r == 16000
+    assert np.allclose(dec_r, pcm, atol=2e-4)
     ok, sr, conf = _probe_header(real)
     assert ok and sr == 16000 and conf > 0
     # synth_clip_bytes gained the native label
@@ -439,18 +434,14 @@ def test_flac_native_through_engine(spark):
     assert via_label[:4] == b"fLaC" and via_label == real
 
     df = spark.createDataFrame(
-        [("real", bytearray(real), 16000, 500, "flac", "x"),
-         ("fake", bytearray(fake), 16000, 500, "flac", "x")],
+        [("real", bytearray(real), 16000, 500, "flac", "x")],
         "clip_id string, bytes binary, sr_hz int, dur_ms int, "
         "codec string, transcript string",
     )
-    got = {r["clip_id"]: r for r in with_audio_metrics(df).collect()}
-    for cid in ("real", "fake"):
-        assert got[cid]["decode_ok"], got[cid]
-        assert got[cid]["header_sr"] == 16000
-        assert abs(got[cid]["decoded_dur_ms"] - 500.0) < 1.0
-    # fake truncates toward zero, FLAC rounds-to-nearest: +-1 LSB apart
-    assert abs(got["real"]["energy_ratio"] - got["fake"]["energy_ratio"]) < 1e-3
+    got = with_audio_metrics(df).collect()[0]
+    assert got["decode_ok"], got
+    assert got["header_sr"] == 16000
+    assert abs(got["decoded_dur_ms"] - 500.0) < 1.0
 
 
 def test_flac_stereo_modes_and_lpc():

@@ -408,12 +408,42 @@ def test_synth_clip_bytes_unchanged():
     the scalar-table encoders'."""
     h = hashlib.sha256()
     for codec in ("pcm_s16le", "pcm_u8", "pcm_s24le", "pcm_f32le", "mulaw",
-                  "alaw", "adpcm_ima_wav", "flac", "flac_native"):
+                  "alaw", "adpcm_ima_wav", "flac_native"):
         for seed, sr, dur, silent, corrupt in ((3, 8000, 300, False, False),
                                                (4, 16000, 250, True, False),
                                                (5, 8000, 200, False, True)):
             h.update(synth_clip_bytes(seed, sr, dur, codec, silent=silent,
                                       corrupt=corrupt))
     assert h.hexdigest() == (
-        "4d582a4df2ceeca5526e196bf23e3f6010118d1bdd4c943eadbf03d96f7ddf26"
+        "3e04209feb476242082928fba3c9e059dca919fbe69303e1237a41816331734d"
     )
+
+
+@pytest.mark.parametrize("seed,sr,dur,silent,header_sr_override,corrupt", [
+    (3, 8000, 300, False, None, False),
+    (4, 16000, 250, True, None, False),
+    (6, 44100, 1200, False, None, False),
+    (7, 8000, 400, False, 11025, False),
+    (8, 96001, 120, False, None, False),
+    (5, 8000, 200, False, None, True),
+])
+def test_flac_label_decodes_as_pcm16(seed, sr, dur, silent,
+                                     header_sr_override, corrupt):
+    """The fixture's 'flac' label is a native FLAC stream of the PCM16
+    writer's truncated int16 samples: it decodes to the same rate and
+    bit-identical PCM as the 'pcm_s16le' label, and a corrupt clip fails
+    both the same way."""
+    def clip(codec):
+        return synth_clip_bytes(seed, sr, dur, codec, silent=silent,
+                                corrupt=corrupt,
+                                header_sr_override=header_sr_override)
+
+    if corrupt:
+        for codec in ("flac", "pcm_s16le"):
+            with pytest.raises(ValueError):
+                decode_payload(clip(codec), codec)
+        return
+    sr_f, pcm_f = flac.decode_flac(clip("flac"))
+    sr_w, pcm_w = decode_payload(clip("pcm_s16le"), "pcm_s16le")
+    assert sr_f == sr_w == (header_sr_override or sr)
+    assert pcm_f.dtype == pcm_w.dtype and np.array_equal(pcm_f, pcm_w)

@@ -293,6 +293,10 @@ def test_metric_history_per_partition_from_verdict_tables(
         verdicts = {pk: detect_anomaly(job.manifests, "dur_range",
                                        part_key=pk, min_history=2)
                     for pk in parts}
+        manifests = load_manifests(job.manifests)
+        assert verdicts == {pk: detect_anomaly(
+            job.manifests, "dur_range", part_key=pk, min_history=2,
+            manifests=manifests) for pk in parts}
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description",
                     "spark.job.interruptOnCancel"):

@@ -15,7 +15,6 @@ import pytest
 
 from doc_quality_check_spark.functions.media import (
     decode_png,
-    encode_fake_image,
     image_metrics,
 )
 
@@ -230,7 +229,6 @@ def test_image_metrics_end_to_end_real_png(spark):
     rows = [
         ("png_gray", bytearray(encode_png(px_a, 0, filters=[0, 1, 2, 3, 4]))),
         ("png_rgb", bytearray(encode_png(rgb_b, 2, filters=[4]))),
-        ("fake", bytearray(encode_fake_image(1, 6, 4))),
         ("jpeg", bytearray(b"\xff\xd8\xff\xe0rest")),
     ]
     df = spark.createDataFrame(rows, "media_id string, bytes binary")
@@ -241,7 +239,6 @@ def test_image_metrics_end_to_end_real_png(spark):
     assert abs(got["png_gray"]["ink_ratio"] - exp_ink) < 1e-9
     assert got["png_rgb"]["decode_ok"] and (
         got["png_rgb"]["width"], got["png_rgb"]["height"]) == (9, 8)
-    assert got["fake"]["decode_ok"]
     assert not got["jpeg"]["decode_ok"] and got["jpeg"]["error"]
     assert "stub" not in got["jpeg"]["error"]  # real decoder, real error
 

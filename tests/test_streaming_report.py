@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from doc_quality_check_spark.functions.audio import with_escalated_confidence
 from doc_quality_check_spark.functions.media import (
-    encode_fake_image,
+    encode_png_gray,
     image_metrics,
     video_frame_sample,
 )
@@ -294,10 +294,18 @@ def test_report_violation_sample_is_stratified(spark, run_result):
     assert collect_violation_sample(sample, max_violations=10) == sample[:10]
 
 
+def _noise(seed: int, w: int, h: int):
+    """Seeded uniform gray (h, w) pixels."""
+    import numpy as np
+
+    return np.random.default_rng(seed).integers(
+        0, 256, size=(h, w), dtype=np.uint8)
+
+
 def test_image_metrics_plumbing(spark):
     rows = [
-        ("img_ok", encode_fake_image(1, 16, 8)),
-        ("img_trunc", encode_fake_image(2, 64, 64)[:100]),
+        ("img_ok", encode_png_gray(_noise(1, 16, 8))),
+        ("img_trunc", encode_png_gray(_noise(2, 64, 64))[:100]),
         ("img_png_bad", b"\x89PNG\r\n\x1a\nrest"),  # garbage chunk body
         ("img_jpeg", b"\xff\xd8\xff\xe0rest"),      # truncated JPEG
         ("img_empty", b""),
@@ -512,7 +520,7 @@ def test_stream_validate_windowed_skips_media_checks(spark, tmp_path):
     import datetime
 
     base = datetime.datetime(2026, 1, 1, 12, 0, 0)
-    img = bytearray(encode_fake_image(7, 8, 8))
+    img = bytearray(encode_png_gray(_noise(7, 8, 8)))
     rows = [(f"c{i}", base + datetime.timedelta(minutes=i), i % 3, img, "p0")
             for i in range(12)]
     schema = "clip_id string, ts timestamp, dur_ms int, img binary, part_key string"
@@ -636,27 +644,27 @@ def test_avi_rec_lists_and_second_stream():
 
 
 def test_y4m_bounded_sampling_helpers():
-    """Review fix: y4m_info walks offsets without copying planes and
-    y4m_frame_planes decodes only the requested indices — both agree with
-    the full decoder."""
+    """The video opener reads Y4M metadata without copying planes and
+    measures only the frames asked for — in agreement with the full
+    decoder."""
     import numpy as np
 
     from doc_quality_check_spark.functions.media import (
+        _open_video,
         decode_y4m,
         encode_y4m,
-        y4m_frame_planes,
-        y4m_info,
     )
 
-    frames = [np.full((16, 24), 10 * (i + 1), dtype=np.uint8)
-              for i in range(7)]
+    rng = np.random.default_rng(5)
+    frames = [rng.integers(0, 256, size=(16, 24), dtype=np.uint8)
+              for _ in range(7)]
     buf = encode_y4m(frames, fps=(3, 1))
-    assert y4m_info(buf) == (24, 16, 3, 1, 7)
+    *info, frame_luma = _open_video(buf)
+    assert info == [24, 16, 3, 1, 7]
     full = decode_y4m(buf)[4]
-    picked = y4m_frame_planes(buf, {0, 3, 6, 99})  # 99 silently ignored
-    assert set(picked) == {0, 3, 6}
     for i in (0, 3, 6):
-        assert np.array_equal(picked[i], full[i])
+        assert frame_luma(i) == float(full[i].mean())
+    assert _open_video(b"\x00" * 16) is None
 
 
 def test_avi_mjpeg_roundtrip_property():

@@ -23,10 +23,7 @@ from doc_quality_check_spark.functions.audio import (
     encode_wav_pcm16,
     synth_speechlike_pcm,
 )
-from doc_quality_check_spark.functions.media import (
-    FAKEIMG_MAGIC,
-    encode_fake_image,
-)
+from doc_quality_check_spark.functions.media import encode_png_gray
 from doc_quality_check_spark.suite.runner import GLOBAL_PART, SuiteRunner
 from doc_quality_check_spark.suite.spec import Check, CheckSuite
 
@@ -116,16 +113,14 @@ def test_payload_neardup_skipped_without_payload(neardup_clips):
 
 
 def _flat_image(value: int, w: int = 8, h: int = 8) -> bytearray:
-    return bytearray(
-        FAKEIMG_MAGIC + struct.pack("<II", w, h) + bytes([value]) * (w * h)
-    )
+    return bytearray(encode_png_gray(np.full((h, w), value, dtype=np.uint8)))
 
 
 @pytest.fixture(scope="module")
 def media_table(spark):
     import zlib
 
-    # one real PNG (4x2 gray gradient), one FAKEIMG mid-gray, one all-white,
+    # one hand-built PNG (4x2 gray gradient), one seeded-noise PNG, one all-white,
     # one all-black, one corrupt container
     w, h = 4, 2
     raw = b"".join(
@@ -139,7 +134,9 @@ def media_table(spark):
     )
     rows = [
         ("png_ok", bytearray(png)),
-        ("fake_mid", bytearray(encode_fake_image(7, 8, 8))),
+        ("noise_mid", bytearray(encode_png_gray(
+            np.random.default_rng(7).integers(0, 256, size=(8, 8),
+                                              dtype=np.uint8)))),
         ("too_bright", _flat_image(255)),
         ("too_dark", _flat_image(0)),
         ("corrupt", bytearray(b"JUNKJUNKJUNK")),

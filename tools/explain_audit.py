@@ -86,15 +86,19 @@ def run_audits(spark) -> list[tuple[str, bool, str]]:
     #     payload never rides into the image pass, and no shuffle sits
     #     below a decode node (plans print root-first: all text after the
     #     topmost decode node feeds it) — at two shuffle settings
-    from doc_quality_check_spark.functions.media import encode_fake_image
+    import numpy as np
+
+    from doc_quality_check_spark.functions.media import encode_png_gray
 
     mixed = CheckSuite(
         name="mixed", partition_by=["part_key"],
         checks=[Check("dec", "payload_decode", "bytes", {"threshold": 15.0}),
                 Check("img", "payload_image_decode", "img")],
     )
+    noise = np.random.default_rng(7).integers(0, 256, size=(8, 8),
+                                              dtype=np.uint8)
     mixed_clips = clips.withColumn(
-        "img", F.lit(bytearray(encode_fake_image(7, 8, 8))))
+        "img", F.lit(bytearray(encode_png_gray(noise))))
     prior = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         for n in (8, 64):
