@@ -755,6 +755,16 @@ def header_probe_udf(payloads: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["hdr_ok", "hdr_sr", "hdr_conf"])
 
 
+def _flatten(df, udf_col, tmp: str, fields: dict):
+    """``df`` with the struct-valued ``udf_col`` added as ``tmp``, then
+    ``fields`` (output name -> struct field name, or a Column) in ONE
+    withColumns projection, and ``tmp`` dropped."""
+    return df.withColumn(tmp, udf_col).withColumns({
+        name: F.col(f"{tmp}.{v}") if isinstance(v, str) else v
+        for name, v in fields.items()
+    }).drop(tmp)
+
+
 def with_escalated_confidence(
     df,
     payload_col: str = "bytes",
@@ -770,13 +780,8 @@ def with_escalated_confidence(
 
     Adds: conf_tier ('cheap'|'escalated'), decode_conf, and the header fields.
     """
-    probed = df.withColumn("_p", header_probe_udf(F.col(payload_col)))
-    probed = (
-        probed.withColumn("hdr_ok", F.col("_p.hdr_ok"))
-        .withColumn("hdr_sr", F.col("_p.hdr_sr"))
-        .withColumn("hdr_conf", F.col("_p.hdr_conf"))
-        .drop("_p")
-    )
+    probed = _flatten(df, header_probe_udf(F.col(payload_col)), "_p",
+                      {f.name: f.name for f in HEADER_PROBE_SCHEMA.fields})
     cheap_pass = probed.filter(
         F.col("hdr_ok") & (F.col("hdr_conf") >= F.lit(escalate_below))
     ).withColumns(
@@ -792,16 +797,11 @@ def with_escalated_confidence(
     needs_more = probed.filter(
         ~(F.col("hdr_ok") & (F.col("hdr_conf") >= F.lit(escalate_below)))
     )
-    escalated = (
-        needs_more.withColumn(
-            "_m", audio_metrics_udf(F.col(payload_col), F.col(codec_col))
-        )
-        .withColumn("decode_conf", F.col("_m.decode_conf"))
-        .withColumn("conf_tier", F.lit("escalated"))
-        .withColumn("decode_ok", F.col("_m.decode_ok"))
-        .withColumn("header_sr", F.col("_m.header_sr"))
-        .drop("_m", payload_col)
-    )
+    escalated = _flatten(
+        needs_more, audio_metrics_udf(F.col(payload_col), F.col(codec_col)), "_m",
+        {"decode_conf": "decode_conf", "conf_tier": F.lit("escalated"),
+         "decode_ok": "decode_ok", "header_sr": "header_sr"},
+    ).drop(payload_col)
     return cheap_pass.unionByName(escalated)
 
 
@@ -827,11 +827,9 @@ def with_audio_metrics(df, payload_col: str = "bytes", codec_col: str = "codec",
     if cap and df.rdd.getNumPartitions() > cap:
         df = df.coalesce(cap)
     udf = audio_metrics_fast_udf if fast else audio_metrics_udf
-    m = udf(F.col(payload_col), F.col(codec_col))
-    df = df.withColumn("_m", m)
-    for f in AUDIO_METRICS_SCHEMA.fields:
-        df = df.withColumn(f.name, F.col(f"_m.{f.name}"))
-    return df.drop("_m", payload_col)
+    return _flatten(df, udf(F.col(payload_col), F.col(codec_col)), "_m",
+                    {f.name: f.name for f in AUDIO_METRICS_SCHEMA.fields}
+                    ).drop(payload_col)
 
 
 PAYLOAD_MODES = ("superfast", "fast", "balanced", "accurate")
@@ -870,14 +868,11 @@ def with_payload_metrics(
     if needs_full and eff in ("superfast", "balanced"):
         eff = "fast"
     if eff == "superfast":
-        out = (
-            df.withColumn("_p", header_probe_udf(F.col(payload_col)))
-            .withColumn("decode_ok", F.col("_p.hdr_ok"))
-            .withColumn("header_sr", F.col("_p.hdr_sr"))
-            .withColumn("decode_conf", F.col("_p.hdr_conf"))
-            .withColumn("conf_tier", F.lit("cheap"))
-            .drop("_p", payload_col)
-        )
+        out = _flatten(
+            df, header_probe_udf(F.col(payload_col)), "_p",
+            {"decode_ok": "hdr_ok", "header_sr": "hdr_sr",
+             "decode_conf": "hdr_conf", "conf_tier": F.lit("cheap")},
+        ).drop(payload_col)
         return out, eff
     if eff == "balanced":
         return (

@@ -223,39 +223,34 @@ def _hist_pair(
     return cur.join(base, keys, "full_outer").fillna(0, ["c_cnt", "b_cnt"])
 
 
+# Every drift statistic is written once over ``groups``: () is the global
+# form (one row), (group_col,) the grouped one (one row per group). Totals
+# come from a window partitioned by the groups — un-partitioned for the
+# global form — so no separate total aggregate is joined back.
+
+
+def _psi(current_hist, baseline_hist, groups: tuple, epsilon: float) -> DataFrame:
+    j = _hist_pair(current_hist, baseline_hist, groups)
+    w = Window.partitionBy(*groups)
+    p = F.greatest(F.try_divide(F.col("c_cnt"), F.sum("c_cnt").over(w)), F.lit(epsilon))
+    q = F.greatest(F.try_divide(F.col("b_cnt"), F.sum("b_cnt").over(w)), F.lit(epsilon))
+    return (
+        j.select(*groups, ((p - q) * F.log(p / q)).alias("term"))
+        .groupBy(*groups)
+        .agg(F.sum("term").alias("psi"))
+    )
+
+
 def drift_psi(
     current_hist: DataFrame, baseline_hist: DataFrame, epsilon: float = 1e-6
 ) -> DataFrame:
     """Population Stability Index between two (bucket, count) histograms.
 
     Full-outer join on bucket (missing mass → epsilon), PSI = Σ (p-q)·ln(p/q).
-    Both inputs are tiny aggregates — executed as a broadcast join.
+    Both inputs are tiny aggregates; the totals are an un-partitioned window
+    over the joined histogram.
     """
-    joined = _hist_pair(current_hist, baseline_hist)
-    tot = joined.agg(F.sum("c_cnt").alias("ct"), F.sum("b_cnt").alias("bt"))
-    j = joined.crossJoin(F.broadcast(tot))
-    p = F.greatest(F.try_divide(F.col("c_cnt"), F.col("ct")), F.lit(epsilon))
-    q = F.greatest(F.try_divide(F.col("b_cnt"), F.col("bt")), F.lit(epsilon))
-    return j.agg(F.sum((p - q) * F.log(p / q)).alias("psi"))
-
-
-def drift_ks(current_hist: DataFrame, baseline_hist: DataFrame) -> DataFrame:
-    """Kolmogorov–Smirnov statistic over ordered numeric buckets: max |CDF
-    difference|, via a cumulative-sum window on the (tiny) joined histogram."""
-    joined = _hist_pair(current_hist, baseline_hist).withColumn(
-        # try_cast: categorical buckets (codec names) order lexically instead
-        # of failing the ANSI numeric cast; KS over categories is then a
-        # deterministic max-CDF-gap under that fixed order
-        "bucket_num", F.expr("try_cast(bucket AS double)")
-    )
-    w = Window.orderBy(
-        F.asc_nulls_first("bucket_num"), F.asc("bucket")
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tot = joined.agg(F.sum("c_cnt").alias("ct"), F.sum("b_cnt").alias("bt"))
-    j = joined.crossJoin(F.broadcast(tot))
-    cdf_c = F.try_divide(F.sum("c_cnt").over(w), F.col("ct"))
-    cdf_b = F.try_divide(F.sum("b_cnt").over(w), F.col("bt"))
-    return j.select(F.abs(cdf_c - cdf_b).alias("d")).agg(F.max("d").alias("ks"))
+    return _psi(current_hist, baseline_hist, (), epsilon)
 
 
 def drift_psi_by_group(
@@ -273,15 +268,33 @@ def drift_psi_by_group(
     :func:`drift_psi` calls, which would launch P jobs and P shuffles (the
     anti-pattern at P in the thousands). Groups missing from one side get
     the epsilon floor, same as missing buckets in the global form."""
-    j = _hist_pair(current_hist, baseline_hist, (group_col,))
-    w = Window.partitionBy(group_col)
-    p = F.greatest(F.try_divide(F.col("c_cnt"), F.sum("c_cnt").over(w)), F.lit(epsilon))
-    q = F.greatest(F.try_divide(F.col("b_cnt"), F.sum("b_cnt").over(w)), F.lit(epsilon))
-    return (
-        j.select(group_col, ((p - q) * F.log(p / q)).alias("term"))
-        .groupBy(group_col)
-        .agg(F.sum("term").alias("psi"))
+    return _psi(current_hist, baseline_hist, (group_col,), epsilon)
+
+
+def _ks(current_hist, baseline_hist, groups: tuple) -> DataFrame:
+    j = _hist_pair(current_hist, baseline_hist, groups).withColumn(
+        # try_cast: categorical buckets (codec names) order lexically instead
+        # of failing the ANSI numeric cast; KS over categories is then a
+        # deterministic max-CDF-gap under that fixed order
+        "bucket_num", F.expr("try_cast(bucket AS double)")
     )
+    wcum = Window.partitionBy(*groups).orderBy(
+        F.asc_nulls_first("bucket_num"), F.asc("bucket")
+    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    wall = Window.partitionBy(*groups)
+    cdf_c = F.try_divide(F.sum("c_cnt").over(wcum), F.sum("c_cnt").over(wall))
+    cdf_b = F.try_divide(F.sum("b_cnt").over(wcum), F.sum("b_cnt").over(wall))
+    return (
+        j.select(*groups, F.abs(cdf_c - cdf_b).alias("d"))
+        .groupBy(*groups)
+        .agg(F.max("d").alias("ks"))
+    )
+
+
+def drift_ks(current_hist: DataFrame, baseline_hist: DataFrame) -> DataFrame:
+    """Kolmogorov–Smirnov statistic over ordered numeric buckets: max |CDF
+    difference|, via a cumulative-sum window on the (tiny) joined histogram."""
+    return _ks(current_hist, baseline_hist, ())
 
 
 def drift_ks_by_group(
@@ -293,113 +306,37 @@ def drift_ks_by_group(
     the ordered twin of :func:`drift_psi_by_group`: cumulative CDFs run in
     per-group windows, one grouped max over the gap, all groups in ONE
     plan. Same statistic as the global :func:`drift_ks` per group."""
-    j = _hist_pair(current_hist, baseline_hist, (group_col,)).withColumn(
-        "bucket_num", F.expr("try_cast(bucket AS double)")
-    )
-    wcum = Window.partitionBy(group_col).orderBy(
-        F.asc_nulls_first("bucket_num"), F.asc("bucket")
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wall = Window.partitionBy(group_col)
-    cdf_c = F.try_divide(F.sum("c_cnt").over(wcum), F.sum("c_cnt").over(wall))
-    cdf_b = F.try_divide(F.sum("b_cnt").over(wcum), F.sum("b_cnt").over(wall))
-    return (
-        j.select(group_col, F.abs(cdf_c - cdf_b).alias("d"))
-        .groupBy(group_col)
-        .agg(F.max("d").alias("ks"))
-    )
+    return _ks(current_hist, baseline_hist, (group_col,))
 
 
-def drift_w1_by_group(
-    current_hist: DataFrame,
-    baseline_hist: DataFrame,
-    group_col: str = "grp",
-) -> DataFrame:
-    """Per-group Wasserstein-1 → (group, w1) from two GROUPED numeric-bucket
-    histograms, all groups in one plan. Same statistic and NULL semantics
-    as the global :func:`drift_w1` per group: NULL when either side has no
-    numeric mass over the group's merged support (such groups may also be
-    entirely absent when no bucket is numeric — the runner treats both as
-    an unattestable bound)."""
+def _w1(current_hist, baseline_hist, groups: tuple) -> DataFrame:
     j = (
-        _hist_pair(current_hist, baseline_hist, (group_col,))
+        _hist_pair(current_hist, baseline_hist, groups)
         .withColumn("x", F.expr("try_cast(bucket AS double)"))
         .filter(F.col("x").isNotNull())
     )
-    wcum = Window.partitionBy(group_col).orderBy("x").rowsBetween(
+    wcum = Window.partitionBy(*groups).orderBy("x").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    wall = Window.partitionBy(group_col)
+    wall = Window.partitionBy(*groups)
     ct = F.sum("c_cnt").over(wall)
     bt = F.sum("b_cnt").over(wall)
     cdf_c = F.try_divide(F.sum("c_cnt").over(wcum), ct)
     cdf_b = F.try_divide(F.sum("b_cnt").over(wcum), bt)
-    gap = F.lead("x").over(Window.partitionBy(group_col).orderBy("x")) - F.col("x")
+    gap = F.lead("x").over(Window.partitionBy(*groups).orderBy("x")) - F.col("x")
     step = j.select(
-        group_col, ct.alias("ct"), bt.alias("bt"),
+        *groups, ct.alias("ct"), bt.alias("bt"),
         (F.abs(cdf_c - cdf_b) * gap).alias("a"),
     )
-    # unlike the global form, a group always has >= 1 row here (groupBy
-    # never emits empty groups) — only the one-sided-mass guards are live
-    return step.groupBy(group_col).agg(
+    # last row's lead is NULL (sum skips it; both CDFs are 1 there anyway);
+    # single-point support -> 0; NULL when the support is empty (max over
+    # no rows) OR one side has no mass over it (ct/bt = 0 -> NULL CDFs
+    # would masquerade as 0.0)
+    return step.groupBy(*groups).agg(
         F.when(
             (F.max("ct") > 0) & (F.max("bt") > 0),
             F.coalesce(F.sum("a"), F.lit(0.0)),
         ).alias("w1")
-    )
-
-
-def drift_chi2_by_group(
-    current_hist: DataFrame,
-    baseline_hist: DataFrame,
-    group_col: str = "grp",
-) -> DataFrame:
-    """Per-group chi-squared/Cramér's V → (group, chi2, cramers_v, dof)
-    from two GROUPED histograms (group, bucket, count) — the categorical
-    twin of :func:`drift_psi_by_group`, same single-plan shape (grouped
-    aggregate + (group, bucket) equi-join + group window), same statistic
-    as the global :func:`drift_chi2` per group."""
-    j = _hist_pair(current_hist, baseline_hist, (group_col,))
-    w = Window.partitionBy(group_col)
-    ct = F.sum("c_cnt").over(w)
-    bt = F.sum("b_cnt").over(w)
-    pooled = F.try_divide(
-        (F.col("c_cnt") + F.col("b_cnt")).cast("double"),
-        (ct + bt).cast("double"),
-    )
-    e1 = pooled * ct.cast("double")
-    e2 = pooled * bt.cast("double")
-    d1 = F.col("c_cnt").cast("double") - e1
-    d2 = F.col("b_cnt").cast("double") - e2
-    term = (
-        F.when(e1 > 0, d1 * d1 / e1).otherwise(F.lit(0.0))
-        + F.when(e2 > 0, d2 * d2 / e2).otherwise(F.lit(0.0))
-    )
-    agg = (
-        j.select(
-            group_col, term.alias("term"), (ct + bt).alias("n"),
-            ct.alias("ct"), bt.alias("bt"),
-        )
-        .groupBy(group_col)
-        .agg(
-            F.sum("term").alias("raw_chi2"),
-            F.max("n").alias("n"),
-            F.max("ct").alias("ctm"),
-            F.max("bt").alias("btm"),
-            (F.count("*") - F.lit(1)).cast("long").alias("dof"),
-        )
-    )
-    # same one-sided NULL rule as the global drift_chi2: a group present on
-    # only one side (a brand-new or vanished partition) must not score a
-    # degenerate chi2 of 0 and read as zero drift
-    both = (F.col("ctm") > 0) & (F.col("btm") > 0)
-    return agg.select(
-        group_col,
-        F.when(both, F.col("raw_chi2")).alias("chi2"),
-        F.when(
-            both,
-            F.sqrt(F.try_divide(F.col("raw_chi2"), F.col("n").cast("double"))),
-        ).alias("cramers_v"),
-        "dof",
     )
 
 
@@ -416,31 +353,68 @@ def drift_w1(current_hist: DataFrame, baseline_hist: DataFrame) -> DataFrame:
     buckets are excluded (no metric space); NULL when EITHER side has no
     numeric mass (a distribution that disappeared is not 'zero drift' — the
     suite check fails on NULL), identical single-point support yields 0.
-    Both inputs are tiny aggregates — the join broadcasts, the window is
-    over ≤ |buckets| rows."""
-    joined = (
-        _hist_pair(current_hist, baseline_hist)
-        .withColumn("x", F.expr("try_cast(bucket AS double)"))
-        .filter(F.col("x").isNotNull())
+    Both inputs are tiny aggregates — the window is over ≤ |buckets| rows."""
+    return _w1(current_hist, baseline_hist, ())
+
+
+def drift_w1_by_group(
+    current_hist: DataFrame,
+    baseline_hist: DataFrame,
+    group_col: str = "grp",
+) -> DataFrame:
+    """Per-group Wasserstein-1 → (group, w1) from two GROUPED numeric-bucket
+    histograms, all groups in one plan. Same statistic and NULL semantics
+    as the global :func:`drift_w1` per group: NULL when either side has no
+    numeric mass over the group's merged support (such groups may also be
+    entirely absent when no bucket is numeric — the runner treats both as
+    an unattestable bound)."""
+    return _w1(current_hist, baseline_hist, (group_col,))
+
+
+def _chi2(current_hist, baseline_hist, groups: tuple) -> DataFrame:
+    j = _hist_pair(current_hist, baseline_hist, groups)
+    w = Window.partitionBy(*groups)
+    ct = F.sum("c_cnt").over(w)
+    bt = F.sum("b_cnt").over(w)
+    pooled = F.try_divide(
+        (F.col("c_cnt") + F.col("b_cnt")).cast("double"),
+        (ct + bt).cast("double"),
     )
-    wc = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tot = joined.agg(F.sum("c_cnt").alias("ct"), F.sum("b_cnt").alias("bt"))
-    j = joined.crossJoin(F.broadcast(tot))
-    cdf_c = F.try_divide(F.sum("c_cnt").over(wc), F.col("ct"))
-    cdf_b = F.try_divide(F.sum("b_cnt").over(wc), F.col("bt"))
-    step = j.select(
-        F.col("x"), F.col("ct"), F.col("bt"),
-        (F.abs(cdf_c - cdf_b)
-         * (F.lead("x").over(Window.orderBy("x")) - F.col("x"))).alias("a"),
+    e1 = pooled * ct.cast("double")
+    e2 = pooled * bt.cast("double")
+    d1 = F.col("c_cnt").cast("double") - e1
+    d2 = F.col("b_cnt").cast("double") - e2
+    term = (
+        F.when(e1 > 0, d1 * d1 / e1).otherwise(F.lit(0.0))
+        + F.when(e2 > 0, d2 * d2 / e2).otherwise(F.lit(0.0))
     )
-    # last row's lead is NULL (sum skips it; both CDFs are 1 there anyway);
-    # single-point support -> 0; NULL when the support is empty OR one side
-    # has no mass over it (ct/bt = 0 -> NULL CDFs would masquerade as 0.0)
-    return step.agg(
+    agg = (
+        j.select(
+            *groups, term.alias("term"), (ct + bt).alias("n"),
+            ct.alias("ct"), bt.alias("bt"),
+        )
+        .groupBy(*groups)
+        .agg(
+            F.sum("term").alias("raw_chi2"),
+            F.max("n").alias("n"),
+            F.max("ct").alias("ctm"),
+            F.max("bt").alias("btm"),
+            (F.count("*") - F.lit(1)).cast("long").alias("dof"),
+        )
+    )
+    # one-sided mass (a sample that disappeared / never existed, or a
+    # brand-new or vanished partition) is NOT 'zero drift': expected ==
+    # observed identically, chi2 degenerates to 0 — emit NULL so the suite
+    # check fails instead of silently passing (same rule as drift_w1)
+    both = (F.col("ctm") > 0) & (F.col("btm") > 0)
+    return agg.select(
+        *groups,
+        F.when(both, F.col("raw_chi2")).alias("chi2"),
         F.when(
-            (F.count("*") > 0) & (F.max("ct") > 0) & (F.max("bt") > 0),
-            F.coalesce(F.sum("a"), F.lit(0.0)),
-        ).alias("w1")
+            both,
+            F.sqrt(F.try_divide(F.col("raw_chi2"), F.col("n").cast("double"))),
+        ).alias("cramers_v"),
+        "dof",
     )
 
 
@@ -451,41 +425,20 @@ def drift_chi2(current_hist: DataFrame, baseline_hist: DataFrame) -> DataFrame:
     scale-free [0,1] drift score thresholdable independently of table size
     (raw chi2 grows linearly with N at a fixed drift level, so any fixed
     chi2 threshold breaks on a 100× bigger snapshot)."""
-    joined = _hist_pair(current_hist, baseline_hist)
-    tot = joined.agg(F.sum("c_cnt").alias("ct"), F.sum("b_cnt").alias("bt"))
-    j = joined.crossJoin(F.broadcast(tot))
-    pooled = F.try_divide(
-        (F.col("c_cnt") + F.col("b_cnt")).cast("double"),
-        (F.col("ct") + F.col("bt")).cast("double"),
-    )
-    e1 = pooled * F.col("ct").cast("double")
-    e2 = pooled * F.col("bt").cast("double")
-    d1 = F.col("c_cnt").cast("double") - e1
-    d2 = F.col("b_cnt").cast("double") - e2
-    term = (
-        F.when(e1 > 0, d1 * d1 / e1).otherwise(F.lit(0.0))
-        + F.when(e2 > 0, d2 * d2 / e2).otherwise(F.lit(0.0))
-    )
-    agg = j.agg(
-        F.sum(term).alias("raw_chi2"),
-        F.max(F.col("ct") + F.col("bt")).alias("n"),
-        F.max("ct").alias("ctm"),
-        F.max("bt").alias("btm"),
-        (F.count("*") - F.lit(1)).cast("long").alias("dof"),
-    )
-    # one-sided mass (a sample that disappeared / never existed) is NOT
-    # 'zero drift': expected == observed identically, chi2 degenerates to
-    # 0 — emit NULL so the suite check fails instead of silently passing
-    # (same rule as drift_w1's one-sided NULL)
-    both = (F.col("ctm") > 0) & (F.col("btm") > 0)
-    return agg.select(
-        F.when(both, F.col("raw_chi2")).alias("chi2"),
-        F.when(
-            both,
-            F.sqrt(F.try_divide(F.col("raw_chi2"), F.col("n").cast("double"))),
-        ).alias("cramers_v"),
-        "dof",
-    )
+    return _chi2(current_hist, baseline_hist, ())
+
+
+def drift_chi2_by_group(
+    current_hist: DataFrame,
+    baseline_hist: DataFrame,
+    group_col: str = "grp",
+) -> DataFrame:
+    """Per-group chi-squared/Cramér's V → (group, chi2, cramers_v, dof)
+    from two GROUPED histograms (group, bucket, count) — the categorical
+    twin of :func:`drift_psi_by_group`, same single-plan shape (grouped
+    aggregate + (group, bucket) equi-join + group window), same statistic
+    as the global :func:`drift_chi2` per group."""
+    return _chi2(current_hist, baseline_hist, (group_col,))
 
 
 # ---------------------------------------------------------------------------

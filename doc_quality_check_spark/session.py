@@ -33,6 +33,14 @@ def get_spark(
     Sized so batch_rows × payload_size stays ~tens of MB per Python worker:
     1024 suits the ~35KB synthetic clips (measured 30% faster than 256);
     tune DOWN to 64-256 for multi-MB production payloads or the workers OOM.
+
+    ``spark.python.sql.dataFrameDebugging.enabled`` is off: with it on (the
+    PySpark default) every ``F.*`` call records its Python call site in the
+    JVM, about five py4j round trips and a stack walk each, which is most of
+    the driver time a suite run spends building its plans. The trade: a
+    DataFrame error message no longer names the Python line that built the
+    failing expression; the error class, the column and the plan context are
+    unchanged. ``extra_conf`` can turn it back on for debugging.
     """
     cores = cores or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or max(cores, 32)
@@ -71,6 +79,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

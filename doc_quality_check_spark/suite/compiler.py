@@ -144,16 +144,15 @@ def with_row_checks(df, checks: list[Check]):
     counterpart of the reference's hard thresholds (a page can be flagged
     without being ruled Invalid)."""
     row_checks = [c for c in checks if c.is_row_level]
-    for c in row_checks:
-        df = df.withColumn(PASS_PREFIX + c.constraint_id, compile_check(c))
+    df = df.withColumns({PASS_PREFIX + c.constraint_id: compile_check(c) for c in row_checks})
     hard = [c for c in row_checks if c.severity != "warn"]
     reason = F.lit("OK")
     for c in sorted(hard, key=lambda c: c.priority, reverse=True):
         reason = F.when(~F.col(PASS_PREFIX + c.constraint_id), F.lit(c.constraint_id)).otherwise(reason)
-    df = df.withColumn("reason", reason)
-    return df.withColumn(
-        "status", F.when(F.col("reason") == "OK", F.lit("Valid")).otherwise(F.lit("Invalid"))
-    )
+    return df.withColumns({
+        "reason": reason,
+        "status": F.when(reason == "OK", F.lit("Valid")).otherwise(F.lit("Invalid")),
+    })
 
 
 def row_violations(df, checks: list[Check], id_col: str = "clip_id",

@@ -36,7 +36,10 @@ wide operation).
 from __future__ import annotations
 
 import re
+import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
@@ -105,6 +108,18 @@ def _param_bool(v) -> bool:
     if isinstance(v, str):
         return v.strip().lower() not in ("false", "no", "0", "")
     return bool(v)
+
+
+def _verdict_frame(spark, rows: list[tuple]) -> DataFrame:
+    """Driver-side verdict rows as a JVM-local relation: an Arrow table with
+    the explicit schema. A plain Python list would become a Python RDD,
+    whose every evaluation starts Python workers to carry a handful of rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist([dict(zip(VERDICT_COLS, r)) for r in rows],
+                                 schema=to_arrow_schema(VERDICT_SCHEMA))
+    return spark.createDataFrame(table, VERDICT_SCHEMA)
 
 
 def part_key_col(part_cols: list[str]):
@@ -316,7 +331,8 @@ class SuiteRunner:
             # materialize the decode/row-check cache ONCE (a single barrier
             # job), then evaluate table checks CONCURRENTLY — each is a small
             # independent Spark job, and serializing them is pure Amdahl loss
-            # on a warm cache. Scalar aggregates are fused into one job first.
+            # on a warm cache. Scalar aggregates are fused into one job that
+            # runs in the same pool.
             df.count()
             # On resume, table checks run on the FULL input, not the pending
             # subset. On either path, a table check referencing a derived
@@ -366,12 +382,13 @@ class SuiteRunner:
                 )
             def _is_simple(c):
                 # quantile_range with method=tdigest runs its own two-level
-                # digest job — it can't fuse into the scalar aggregate
+                # digest job; completeness_min with per_partition over a
+                # partitioned suite is a GROUPED aggregate emitting one
+                # verdict row per part_key — neither fuses with scalars
                 if c.kind == "quantile_range" and c.params.get("method") == "tdigest":
                     return False
-                # per-partition completeness is a GROUPED aggregate emitting
-                # one verdict row per part_key — not fusable with scalars
-                if _param_bool(c.params.get("per_partition", False)):
+                if (c.kind == "completeness_min" and self.suite.partition_by
+                        and _param_bool(c.params.get("per_partition", False))):
                     return False
                 return c.kind in _SIMPLE_AGG_KINDS
 
@@ -379,33 +396,32 @@ class SuiteRunner:
             complex_ = [c for c in table_checks if not _is_simple(c)]
             results: dict[str, tuple] = {}
             extras: dict[str, DataFrame] = {}
-            timings = check_timings
-            if simple:
-                import time as _time
 
-                t0 = _time.perf_counter()
-                for cid, v in self._run_simple_aggs(table_df, simple).items():
-                    results[cid] = v
-                fused = _time.perf_counter() - t0
-                # ONE fused job serves every simple check — attribute each an
-                # equal share so the per-check timings still SUM to real wall
-                # (recording the full wall N times would over-count N-fold)
-                share = fused / len(simple)
-                for c in simple:
-                    timings[c.constraint_id] = round(share, 3)
-            if complex_:
-                import time as _time
-                from concurrent.futures import ThreadPoolExecutor
+            def run_simple():
+                return {cid: (v, None) for cid, v
+                        in self._run_simple_aggs(table_df, simple).items()}
 
-                def run_one(check):
-                    t0 = _time.perf_counter()
-                    out = self._run_table_check(table_df, check, catalog, baseline)
-                    return check.constraint_id, out, _time.perf_counter() - t0
+            def run_one(check):
+                return {check.constraint_id: self._run_table_check(
+                    table_df, check, catalog, baseline)}
 
-                with ThreadPoolExecutor(max_workers=min(4, len(complex_))) as ex:
-                    for cid, (v, extra), dt in ex.map(run_one, complex_):
+            # ONE pool runs the fused scalar job next to every other check
+            tasks = [(simple, run_simple)] if simple else []
+            tasks += [([c], partial(run_one, c)) for c in complex_]
+
+            def timed(task):
+                t0 = time.perf_counter()
+                return task[0], task[1](), time.perf_counter() - t0
+
+            with ThreadPoolExecutor(max_workers=min(4, len(tasks))) as ex:
+                for done, out, dt in ex.map(timed, tasks):
+                    # ONE fused job serves every simple check — attribute
+                    # each an equal share so the per-check timings still SUM
+                    # to real wall (the full wall N times would over-count)
+                    for c in done:
+                        check_timings[c.constraint_id] = round(dt / len(done), 3)
+                    for cid, (v, extra) in out.items():
                         results[cid] = v
-                        timings[cid] = round(dt, 3)
                         if extra is not None:
                             extras[cid] = extra
             for check in table_checks:  # preserve suite order
@@ -430,9 +446,8 @@ class SuiteRunner:
                 self._run_caches.append(resume_cache)
 
         if table_verdict_rows:
-            spark = df.sparkSession
-            tv = spark.createDataFrame(table_verdict_rows, VERDICT_SCHEMA)
-            verdicts = verdicts.unionByName(tv)
+            verdicts = verdicts.unionByName(
+                _verdict_frame(df.sparkSession, table_verdict_rows))
         for vdf in table_verdict_dfs:
             verdicts = verdicts.unionByName(vdf)
 
@@ -499,7 +514,7 @@ class SuiteRunner:
         aggregation map-side, a single shuffle total. Multi-column partition
         keys collapse into one '/'-joined part_key string."""
         if not row_checks:
-            return df.sparkSession.createDataFrame([], VERDICT_SCHEMA)
+            return _verdict_frame(df.sparkSession, [])
         part = part_key_col(part_cols)
         aggs = [F.count(F.lit(1)).alias("n_rows")] + [
             F.sum(F.when(~F.col(PASS_PREFIX + c.constraint_id), 1).otherwise(0))
@@ -562,7 +577,7 @@ class SuiteRunner:
                 passed = p.get("min", 0) <= metric <= p.get("max", float("inf"))
             else:
                 # quantile over an all-NULL column is NULL: no value can
-                # attest the bound — fail (same rule as _run_table_check)
+                # attest the bound — fail
                 passed = (
                     row[cid] is not None
                     and p.get("min", float("-inf")) <= metric <= p.get("max", float("inf"))
@@ -628,59 +643,40 @@ class SuiteRunner:
             metric = float(n_viol)
             passed = n_viol == 0
         elif check.kind == "completeness_min":
-            if _param_bool(p.get("per_partition", False)) and self.suite.partition_by:
-                # one verdict row per part_key from ONE grouped aggregate —
-                # completeness localized the same way per-partition drift is
-                mn = float(p.get("min_ratio", 1.0))
-                grouped = df.groupBy(
-                    part_key_col(self.suite.partition_by).alias("grp")
-                ).agg(
-                    F.try_divide(F.count(check.column), F.count(F.lit(1))).alias("r"),
-                    F.count(F.lit(1)).alias("n"),
-                )
-                # verdict rows stay a DataFrame — never collected: at 10^6+
-                # part keys the per-check driver round-trip is the scale
-                # wall; rows reach the driver only at the report sink
-                vdf = grouped.select(
-                    F.col("grp").alias("part_key"),
-                    F.lit(cid).alias("constraint_id"),
-                    F.col("n").cast("long").alias("n_rows"),
-                    F.lit(0).cast("long").alias("n_violations"),
-                    (F.col("r").isNotNull() & (F.col("r") >= F.lit(mn))).alias("passed"),
-                    F.coalesce(F.col("r"), F.lit(0.0)).cast("double").alias("metric_value"),
-                )
-                return vdf, None
-            row = df.agg(
+            # only the per-partition form lands here (the global one fuses
+            # into _run_simple_aggs): one verdict row per part_key from ONE
+            # grouped aggregate — completeness localized the same way
+            # per-partition drift is
+            mn = float(p.get("min_ratio", 1.0))
+            grouped = df.groupBy(
+                part_key_col(self.suite.partition_by).alias("grp")
+            ).agg(
                 F.try_divide(F.count(check.column), F.count(F.lit(1))).alias("r"),
                 F.count(F.lit(1)).alias("n"),
-            ).first()
-            metric = float(row["r"]) if row["r"] is not None else 1.0
-            n_rows, n_viol = int(row["n"]), 0
-            passed = metric >= float(p.get("min_ratio", 1.0))
-        elif check.kind == "row_count_min":
-            n_rows = df.count()
-            metric = float(n_rows)
-            n_viol = 0
-            passed = n_rows >= int(p["min_rows"])
-        elif check.kind == "distinct_range":
-            d = df.agg(F.approx_count_distinct(check.column).alias("d")).first()["d"]
-            metric = float(d)
-            n_viol = 0
-            passed = p.get("min", 0) <= d <= p.get("max", float("inf"))
+            )
+            # verdict rows stay a DataFrame — never collected: at 10^6+
+            # part keys the per-check driver round-trip is the scale
+            # wall; rows reach the driver only at the report sink
+            vdf = grouped.select(
+                F.col("grp").alias("part_key"),
+                F.lit(cid).alias("constraint_id"),
+                F.col("n").cast("long").alias("n_rows"),
+                F.lit(0).cast("long").alias("n_violations"),
+                (F.col("r").isNotNull() & (F.col("r") >= F.lit(mn))).alias("passed"),
+                F.coalesce(F.col("r"), F.lit(0.0)).cast("double").alias("metric_value"),
+            )
+            return vdf, None
         elif check.kind == "quantile_range":
-            q = float(p.get("q", 0.5))
-            if p.get("method") == "tdigest":
-                from doc_quality_check_spark.operators.aggregates import (
-                    tdigest_quantiles,
-                )
+            # method=tdigest only (percentile_approx fuses into
+            # _run_simple_aggs): a two-level digest job of its own
+            from doc_quality_check_spark.operators.aggregates import (
+                tdigest_quantiles,
+            )
 
-                val = tdigest_quantiles(
-                    df, check.column, [q], int(p.get("delta", 100))
-                )[q]
-            else:
-                val = df.agg(
-                    F.expr(f"percentile_approx({check.column}, {q})").alias("v")
-                ).first()["v"]
+            q = float(p.get("q", 0.5))
+            val = tdigest_quantiles(
+                df, check.column, [q], int(p.get("delta", 100))
+            )[q]
             metric = float(val) if val is not None else 0.0  # all-null column
             n_viol = 0
             # all-null column: no quantile exists, the bound cannot be

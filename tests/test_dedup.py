@@ -296,9 +296,11 @@ def test_curation_pipeline_example(spark):
     """examples/curation_pipeline.py composes the curation operators
     end-to-end: monotone funnel, eval-contaminated docs gone, near-dup
     clusters reduced to one survivor, every survivor split-assigned."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/examples")
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "examples"))
     from curation_pipeline import curate
 
     base = [(i, f"alpha beta gamma delta epsilon doc {i} " * 3) for i in range(40)]

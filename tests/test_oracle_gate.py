@@ -164,3 +164,25 @@ def test_rotation_ignores_failed_samples(entry, tmp_path, monkeypatch):
     assert last.get("range_join", 0) == 10       # list-of-dicts shape parses
     order = list(mod.queries())                  # and nothing crashed
     assert order.index("asof_join") < order.index("upsample_groups")
+
+
+def test_check_oracle_imports_the_package_beside_it(tmp_path):
+    """tools/check_oracle.py puts its own checkout first on sys.path: run
+    from a second copy of the repository (an A/B parent, a worktree), the
+    package modules imported after it come from that copy."""
+    import shutil
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    copy = tmp_path / "checkout"
+    skip = shutil.ignore_patterns("__pycache__")
+    for d in ("tools", "doc_quality_check_spark"):
+        shutil.copytree(os.path.join(root, d), copy / d, ignore=skip)
+    probe = ("import tools.check_oracle\n"
+             "import doc_quality_check_spark.operators.aggregates as m\n"
+             "print(m.__file__)")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run([sys.executable, "-c", probe], cwd=copy, env=env,
+                         capture_output=True, text=True, check=True)
+    assert out.stdout.strip() == str(
+        copy / "doc_quality_check_spark" / "operators" / "aggregates.py")

@@ -465,3 +465,58 @@ def test_per_partition_verdicts_stay_distributed(spark):
     n_passed = res.verdicts.filter("passed").count()
     assert n_passed == 2 * n_parts
     res.unpersist()
+
+
+# verdict tuples of the scalar table checks on the test clips; per_partition
+# does not change them, since only completeness over partition columns has a
+# per-partition form
+SCALAR_CHECKS = {
+    "row_count_min": (None, {"min_rows": 10}, (2400, 0, True, 2400.0)),
+    "distinct_range": ("codec", {"min": 1, "max": 5}, (None, 0, True, 4.0)),
+    "quantile_range": ("dur_ms", {"q": 0.9, "min": 0, "max": 50000},
+                       (None, 0, True, 1376.0)),
+    "completeness_min": ("transcript", {"min_ratio": 0.99},
+                         (2400, 0, True, 0.9975)),
+}
+
+
+@pytest.mark.parametrize("partition_by", [[], ["part_key"]])
+@pytest.mark.parametrize("per_partition", [False, True])
+def test_scalar_table_checks_ignore_per_partition(spark, clips_dir,
+                                                 partition_by, per_partition):
+    """row_count_min, distinct_range, percentile quantile_range and
+    completeness_min without partition columns have one implementation, the
+    fused scalar aggregate, whatever their per_partition flag says: one
+    global verdict row each, the same tuple in every combination."""
+    from doc_quality_check_spark.suite.spec import Check
+
+    checks = [
+        Check(kind, kind, col, {**params, "per_partition": per_partition})
+        for kind, (col, params, _) in SCALAR_CHECKS.items()
+        # completeness over partition columns is the grouped form
+        if not (kind == "completeness_min" and partition_by)
+    ]
+    suite = CheckSuite("scalar", checks, partition_by=partition_by)
+    res = SuiteRunner(suite).run(load_clips(spark, clips_dir), payload=False)
+    rows = [tuple(r) for r in res.verdicts.collect()]
+    res.unpersist()
+    assert sorted(rows) == sorted(
+        (GLOBAL_PART, c.kind, *SCALAR_CHECKS[c.kind][2]) for c in checks
+    )
+
+
+def test_errors_name_the_column_without_call_site_capture(spark, clips_dir):
+    """get_spark turns off PySpark's DataFrame call-site capture; the errors
+    a suite author sees must still name the offending column or check."""
+    from pyspark.errors import AnalysisException
+
+    from doc_quality_check_spark.suite.spec import Check
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    clips = load_clips(spark, clips_dir)
+    missing = CheckSuite("missing", [Check("ghost_nn", "not_null", "ghost_col")])
+    with pytest.raises(AnalysisException, match="ghost_col"):
+        SuiteRunner(missing).run(clips, payload=False)
+    corr = CheckSuite("corr", [Check("dur_corr", "corr_range", "dur_ms")])
+    with pytest.raises(ValueError, match=r"dur_corr.*col2"):
+        SuiteRunner(corr).run(clips, payload=False)

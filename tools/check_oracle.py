@@ -11,11 +11,14 @@ from __future__ import annotations
 import decimal
 import hashlib
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool lives in, not a fixed path: run from a second copy
+# (an A/B parent, a worktree) it must test that copy's package
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def norm(v):

@@ -119,6 +119,39 @@ def run_audits(spark) -> list[tuple[str, bool, str]]:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prior)
 
+    # 5c. no Python outside the decode: the table-check verdict rows are a
+    #     JVM-local relation, so a metadata-only default-suite run starts no
+    #     Python worker at all, and a payload run has exactly one Python
+    #     node, the audio decode. `PythonRDD[` is the lineage node token: a
+    #     parallelized Python list shows one, and the bare word also names
+    #     the PythonRDD.scala call site that reads it. A plan that prints
+    #     the cached decode more than once prints the same node each time.
+    import re
+
+    from doc_quality_check_spark.sources.clips import load_baseline, load_catalog
+    from doc_quality_check_spark.suite.spec import default_suite
+
+    py_node = re.compile(r"(?:ArrowEvalPython|BatchEvalPython|MapInPandas)[^\n]*")
+    for payload in (False, True):
+        res = SuiteRunner(default_suite()).run(
+            clips, catalog=load_catalog(spark, clips_dir),
+            baseline=load_baseline(spark, clips_dir), payload=payload)
+        outs = (res.verdicts, res.violations)
+        nodes = sorted({n for df in outs for n in py_node.findall(plan_of(df))})
+        py_rdds = sum(df.rdd.toDebugString().decode().count("PythonRDD[")
+                      for df in outs)
+        res.unpersist()
+        tag = "payload" if payload else "metadata-only"
+        audit(f"{tag} default suite: no PythonRDD in verdict/violation lineage",
+              py_rdds == 0, f"PythonRDD nodes={py_rdds}")
+        if payload:
+            audit("payload default suite: one Python node, the audio decode",
+                  len(nodes) == 1 and "audio_metrics_udf" in nodes[0],
+                  [n[:80] for n in nodes])
+        else:
+            audit("metadata-only default suite: no Python eval node", not nodes,
+                  [n[:80] for n in nodes])
+
     # 6. dedup jaccard: the shingle equi-join must be a hash join with
     #    map-side partial aggregation (no cartesian / nested loop)
     p = plan_of(QUERIES["dedup_jaccard"](spark, SF))
