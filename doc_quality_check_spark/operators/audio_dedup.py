@@ -131,7 +131,6 @@ def audio_neardup_pairs(
     max_hamming: int = 7,
     frames: int = AFP_FRAMES,
     bands: int = AFP_BANDS,
-    materialize: bool = True,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
     n_blocks: int | None = None,
 ) -> DataFrame:
@@ -149,13 +148,13 @@ def audio_neardup_pairs(
     (pigeonhole) — the block join proposes every qualifying pair without an
     all-pairs scan, exactly as :func:`dedup.simhash_pairs` does for text.
 
-    ``materialize`` (default ON, unlike the text LSH pair finders): the
-    fingerprint subtree is a decode+FFT pandas-UDF pass — by far the most
-    expensive stage — and the self-join consumes it TWICE; an eager
-    localCheckpoint halves the decode work. Measured at the bench point
-    (sf0.1 events-synthesized corpus, ~1.5k clips): 28.8s → ~4s. The text
-    finders default OFF because their signature pass is one cheap
-    aggregation; this one is the hot path itself."""
+    The fingerprint table is always checkpointed (eager localCheckpoint),
+    unlike the text LSH pair finders: its subtree is a decode+FFT
+    pandas-UDF pass — by far the most expensive stage — and the self-join
+    consumes it TWICE; the checkpoint halves the decode work. Measured at
+    the bench point (sf0.1 events-synthesized corpus, ~1.5k clips): 28.8s →
+    ~4s. The text finders skip it because their signature pass is one
+    cheap aggregation; this one is the hot path itself."""
     # n_blocks=None AUTO-SIZES the key from the corpus count
     # (dedup.auto_hamming_blocks): the classic max_hamming+1 blocks for
     # small corpora, wider combination keys (e.g. 10 blocks → C(10,3)=120
@@ -163,18 +162,20 @@ def audio_neardup_pairs(
     # the hot-bucket guard would otherwise star-reduce true pairs away.
     # The exact bit_count post-filter keeps the pair set identical for
     # every adequate n_blocks choice.
-    fp = audio_fingerprints(df, id_col, bytes_col, codec_col, frames, bands)
-    fp = fp.filter(F.col("afp").isNotNull())
+    # checkpointed before the NULL filter: one row per input row, so its
+    # count sizes the keys from the corpus count without a second scan
+    fp = audio_fingerprints(
+        df, id_col, bytes_col, codec_col, frames, bands
+    ).localCheckpoint(eager=True)
     # auto stops at 10 blocks (C(10,3)=120 keys ≈ 26M-fingerprint capacity
     # at the default cap) — combination count grows combinatorially past
     # that, so larger corpora should pass an explicit n_blocks tuned to
     # their scale rather than inherit a 1000+-key explode
     nb = n_blocks if n_blocks is not None else auto_hamming_blocks(
-        df.count(), 64, max_hamming, max_bucket_size,
+        fp.count(), 64, max_hamming, max_bucket_size,
         choices=tuple(b for b in (max_hamming + 1, 10) if b > max_hamming),
     )
-    if materialize:
-        fp = fp.localCheckpoint(eager=True)
+    fp = fp.filter(F.col("afp").isNotNull())
     keys = hamming_block_keys(F.col("afp"), 64, nb, max_hamming)
     long = fp.select(
         F.col(id_col), "afp", F.explode(F.array(*keys)).alias("e")

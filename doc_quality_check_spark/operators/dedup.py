@@ -570,7 +570,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     rows_per_band: int = 4,
     threshold: float = 0.6,
-    materialize: bool = False,
     broadcast_sizes: bool = True,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
@@ -590,13 +589,12 @@ def minhash_lsh_pairs(
     identical connected components above it. The default never engages at
     fixture scale, keeping oracle parity exact.
 
-    ``materialize`` (default OFF, unlike :func:`jaccard_pairs`): eager
-    localCheckpoints of the band table + verification shingles were A/B
-    measured SLOWER here (2.7-3.0s → ~4.1s at sf0.1, 3 interleaved reps):
-    the candidate-restricted verify reuses far less recompute than
-    jaccard's four-consumer explosion, and the two blocking
-    materializations serialize subtrees Spark otherwise runs concurrently.
-    Kept as a knob for shapes where candidates dominate."""
+    No checkpoint, unlike :func:`jaccard_pairs`: eager localCheckpoints of
+    the band table + verification shingles were A/B measured SLOWER here
+    (2.7-3.0s → ~4.1s at sf0.1, 3 interleaved reps): the
+    candidate-restricted verify reuses far less recompute than jaccard's
+    four-consumer explosion, and the two blocking materializations
+    serialize subtrees Spark otherwise runs concurrently."""
     k = bands * rows_per_band
     sig = minhash_signatures(df, id_col, text_col, n, k)
     band_cols = [
@@ -613,8 +611,6 @@ def minhash_lsh_pairs(
     long = banded.selectExpr(
         id_col, f"stack({bands}, {stack}) AS (band_idx, band_key)"
     )
-    if materialize:
-        long = long.localCheckpoint(eager=True)
     cand = banded_pairs(
         long, id_col, ["band_idx", "band_key"],
         max_bucket_size=max_bucket_size,
@@ -622,8 +618,6 @@ def minhash_lsh_pairs(
     # exact-Jaccard verification restricted to the candidate pairs — the
     # shared-shingle count is computed per candidate, not all-pairs
     sh = exploded_shingles(df, id_col, text_col, n, hashed=True)
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
     return _verify_jaccard(cand, sh, id_col, threshold, broadcast_sizes)
 
 
@@ -652,7 +646,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
 
 def simhash_pairs(
     df: DataFrame, id_col: str, text_col: str, n: int = 3, max_hamming: int = 3,
-    materialize: bool = False,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
     n_blocks: int | None = None,
 ) -> DataFrame:
@@ -674,11 +667,10 @@ def simhash_pairs(
     The exact Hamming post-filter makes every adequate n_blocks choice
     return the same pair set — only candidate volume changes.
 
-    ``materialize`` (default OFF): checkpointing the signature table before
-    the two self-join sides A/B measured a wash at sf0.1 (2.6-3.2s both
-    ways, 3 interleaved reps) — the signature agg is one cheap pass and the
-    blocking checkpoint gives back what the reuse saves. Knob kept for
-    wider signature tables.
+    No checkpoint of the signature table before the two self-join sides:
+    it A/B measured a wash at sf0.1 (2.6-3.2s both ways, 3 interleaved
+    reps) — the signature agg is one cheap pass and the blocking
+    checkpoint gives back what the reuse saves.
 
     ``max_bucket_size``: hot-block guard (see :func:`banded_pairs`) for
     SIMILARITY-degenerate corpora (near-identical docs all sharing one
@@ -688,8 +680,6 @@ def simhash_pairs(
     buckets widen ``n_blocks`` instead (see the DEFAULT_MAX_BUCKET_SIZE
     scope note)."""
     sig = simhash(df, id_col, text_col, n)
-    if materialize:
-        sig = sig.localCheckpoint(eager=True)
     if n_blocks is None:
         n_blocks = auto_hamming_blocks(
             df.count(), SIMHASH_BITS, max_hamming, max_bucket_size,

@@ -268,7 +268,8 @@ class ValidationJob:
         m.input_lineage["timing_sec"] = {
             "suite_run": round(run_sec, 3),
             "result_write": round(write_sec, 3),
-            # per-table-check wall seconds (F20 parity: the reference returns
+            # per-table-check wall seconds, each the check's execution up to
+            # its cached verdict frame (F20 parity: the reference returns
             # elapsed time with every metric)
             "table_checks": dict(res.table_metrics),
         }

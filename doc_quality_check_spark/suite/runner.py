@@ -14,8 +14,21 @@ Physical plan (the Spark translation of the reference's CLI lifecycle,
         ├─ per-partition verdicts (single groupBy(part_key) w/ conditional
         │                          sums, unpivoted to long form)
         ├─ table-level checks    (uniqueness / referential / completeness /
-        │                         drift — each its own small aggregate)
+        │                         drift / ... — each its own small aggregate,
+        │                         the scalar ones fused into one)
         └─ global summary        (one agg)
+
+Table checks run in one thread pool after a barrier count of the cache.
+Every task returns one shape, a verdict frame (VERDICT_COLS; one global row,
+or one row per part_key) plus an optional violations frame; the pool
+persists and counts each verdict frame once, so ``table_metrics`` times the
+check's execution and the verdict union reads only cached frames. Global
+drift runs in the per-partition drift branch as the no-group case of the
+same statistic, whose one-row aggregate needs no group. The warn-severity
+rule is one Column rewrite over the final verdict union. Lifecycle: the
+resume re-decode is released when the pool ends; the verdict frames and
+payload_neardup's redundant set are released with the result
+(``RunResult.unpersist``).
 
 A check demands a modality's decode when its kind is one of that
 modality's row kinds or it references one of its metric columns
@@ -59,7 +72,17 @@ from doc_quality_check_spark.functions.media import (
     with_image_metrics,
     with_video_metrics,
 )
-from doc_quality_check_spark.operators.aggregates import drift_ks, drift_psi, histogram
+from doc_quality_check_spark.operators.aggregates import (
+    bucket_col,
+    drift_chi2,
+    drift_chi2_by_group,
+    drift_ks,
+    drift_ks_by_group,
+    drift_psi,
+    drift_psi_by_group,
+    drift_w1,
+    drift_w1_by_group,
+)
 from doc_quality_check_spark.operators.joins import duplicate_keys, referential_violations
 from doc_quality_check_spark.suite.compiler import PASS_PREFIX, row_violations, with_row_checks
 from doc_quality_check_spark.suite.spec import (
@@ -84,6 +107,15 @@ DERIVED_METRIC_COLUMNS = {
 
 # table-check kinds that lower to scalar aggregates — fused into one agg job
 _SIMPLE_AGG_KINDS = {"completeness_min", "row_count_min", "distinct_range", "quantile_range"}
+
+# drift kind -> (global and grouped statistic, its column, threshold
+# param, default)
+_DRIFT = {
+    "drift_psi": (drift_psi, drift_psi_by_group, "psi", "max_psi", 0.2),
+    "drift_ks": (drift_ks, drift_ks_by_group, "ks", "max_ks", 0.1),
+    "drift_w1": (drift_w1, drift_w1_by_group, "w1", "max_w1", 1.0),
+    "drift_chi2": (drift_chi2, drift_chi2_by_group, "cramers_v", "max_v", 0.1),
+}
 
 VERDICT_COLS = ["part_key", "constraint_id", "n_rows", "n_violations", "passed", "metric_value"]
 
@@ -122,6 +154,20 @@ def _verdict_frame(spark, rows: list[tuple]) -> DataFrame:
     return spark.createDataFrame(table, VERDICT_SCHEMA)
 
 
+def _verdict_cols(cid: str, n_rows, n_violations, passed, metric,
+                  part_key=None) -> list:
+    """The VERDICT_COLS of one table check as Column expressions (values
+    or Columns; ``part_key`` defaults to the global key)."""
+    return [
+        (F.lit(GLOBAL_PART) if part_key is None else part_key).alias("part_key"),
+        F.lit(cid).alias("constraint_id"),
+        F.lit(n_rows).cast("long").alias("n_rows"),
+        F.lit(n_violations).cast("long").alias("n_violations"),
+        passed.alias("passed"),
+        metric.cast("double").alias("metric_value"),
+    ]
+
+
 def part_key_col(part_cols: list[str]):
     """The canonical part_key expression — shared by the verdict groupBy and
     the resume filter so multi-column partition keys resume correctly. NULL
@@ -145,10 +191,10 @@ class RunResult:
     # constraint_id -> wall seconds for each table-level check (F20: the
     # reference returns elapsed time with every metric, clarity_check.py:21)
     table_metrics: dict[str, float] = field(default_factory=dict)
-    # DataFrames persisted by table checks (e.g. payload_neardup's redundant
-    # set) that back lazy `violations` rows — released with the result, not
-    # before, so the violations union stays cache-served until the caller is
-    # done materializing it
+    # DataFrames persisted by table checks: every verdict frame, and
+    # payload_neardup's redundant set that backs lazy `violations` rows —
+    # released with the result, not before, so the verdict and violation
+    # unions stay cache-served until the caller is done materializing them
     extra_caches: list = field(default_factory=list)
 
     def unpersist(self) -> None:
@@ -307,26 +353,17 @@ class SuiteRunner:
         viols = row_violations(df, row_checks, id_col=id_col, part_cols=part_cols)
         verdicts = self._partition_verdicts(df, row_checks, part_cols)
 
-        table_verdict_rows: list[tuple] = []
-        table_verdict_dfs: list[DataFrame] = []
+        # table-check verdict frames, each cached: schema_match rows first
+        # (the RAW input schema, pure metadata, no Spark job), then one
+        # frame per pool task
+        verdict_frames: list[DataFrame] = []
         check_timings: dict[str, float] = {}
-        # schema_match validates the RAW input schema (pure metadata — the
-        # checked df has bytes dropped and metric columns added, so it must
-        # not be the comparison target); evaluated inline, no Spark job.
         schema_checks = [c for c in table_checks if c.kind == "schema_match"]
         table_checks = [c for c in table_checks if c.kind != "schema_match"]
-        def _apply_severity(check, row):
-            # advisory table checks: same rule as row checks — the verdict
-            # row keeps its n_violations/metric_value but never fails
-            if check.severity == "warn" and not row[4]:
-                return (*row[:4], True, *row[5:])
-            return row
-
-        for check in schema_checks:
-            table_verdict_rows.append(
-                _apply_severity(check, self._run_schema_check(full_clips, check))
-            )
-            check_timings[check.constraint_id] = 0.0
+        if schema_checks:
+            verdict_frames.append(_verdict_frame(df.sparkSession, [
+                self._run_schema_check(full_clips, c) for c in schema_checks]))
+            check_timings.update({c.constraint_id: 0.0 for c in schema_checks})
         if table_checks:
             # materialize the decode/row-check cache ONCE (a single barrier
             # job), then evaluate table checks CONCURRENTLY — each is a small
@@ -393,63 +430,50 @@ class SuiteRunner:
                 return c.kind in _SIMPLE_AGG_KINDS
 
             simple = [c for c in table_checks if _is_simple(c)]
-            complex_ = [c for c in table_checks if not _is_simple(c)]
-            results: dict[str, tuple] = {}
-            extras: dict[str, DataFrame] = {}
-
-            def run_simple():
-                return {cid: (v, None) for cid, v
-                        in self._run_simple_aggs(table_df, simple).items()}
-
-            def run_one(check):
-                return {check.constraint_id: self._run_table_check(
-                    table_df, check, catalog, baseline)}
-
-            # ONE pool runs the fused scalar job next to every other check
-            tasks = [(simple, run_simple)] if simple else []
-            tasks += [([c], partial(run_one, c)) for c in complex_]
+            # ONE pool runs the fused scalar job next to every other check;
+            # each task returns (verdict frame, extra violations | None)
+            tasks = [
+                (simple, lambda: (self._run_simple_aggs(table_df, simple), None))
+            ] if simple else []
+            tasks += [
+                ([c], partial(self._run_table_check, table_df, c, catalog, baseline))
+                for c in table_checks if not _is_simple(c)
+            ]
 
             def timed(task):
+                # the check's execution is its cached frame's one count: the
+                # verdict union then reads the cache, never the check's plan
                 t0 = time.perf_counter()
-                return task[0], task[1](), time.perf_counter() - t0
+                vdf, extra = task[1]()
+                vdf = vdf.persist()
+                vdf.count()
+                return task[0], vdf, extra, time.perf_counter() - t0
 
             with ThreadPoolExecutor(max_workers=min(4, len(tasks))) as ex:
-                for done, out, dt in ex.map(timed, tasks):
+                for done, vdf, extra, dt in ex.map(timed, tasks):
                     # ONE fused job serves every simple check — attribute
                     # each an equal share so the per-check timings still SUM
                     # to real wall (the full wall N times would over-count)
                     for c in done:
                         check_timings[c.constraint_id] = round(dt / len(done), 3)
-                    for cid, (v, extra) in out.items():
-                        results[cid] = v
-                        if extra is not None:
-                            extras[cid] = extra
-            for check in table_checks:  # preserve suite order
-                got = results[check.constraint_id]
-                if isinstance(got, DataFrame):
-                    # per-partition checks (completeness/drift) return their
-                    # verdict rows as a DataFrame — one row per part_key,
-                    # never collected to the driver (at 10^6 part keys the
-                    # per-check round-trip is the scale wall); severity is a
-                    # column rewrite, the advisory rule unchanged
-                    if check.severity == "warn":
-                        got = got.withColumn("passed", F.lit(True))
-                    table_verdict_dfs.append(got)
-                else:
-                    table_verdict_rows.append(_apply_severity(check, got))
-                if check.constraint_id in extras:
-                    viols = viols.unionByName(extras[check.constraint_id])
+                    self._run_caches.append(vdf)
+                    verdict_frames.append(vdf)
+                    if extra is not None:
+                        viols = viols.unionByName(extra)
             if resume_cache is not None:
-                # released with the RunResult: per-partition verdict
-                # DataFrames computed over it are lazy and must stay
-                # cache-served until the caller materializes verdicts
-                self._run_caches.append(resume_cache)
+                # every frame computed over the re-decode is cached by now
+                resume_cache.unpersist()
 
-        if table_verdict_rows:
-            verdicts = verdicts.unionByName(
-                _verdict_frame(df.sparkSession, table_verdict_rows))
-        for vdf in table_verdict_dfs:
+        for vdf in verdict_frames:
             verdicts = verdicts.unionByName(vdf)
+        # advisory (severity='warn') checks, row- or table-level, never flip
+        # a verdict's passed flag — failures stay visible through
+        # n_violations/metric_value
+        warn_ids = [c.constraint_id for c in suite.enabled_checks()
+                    if c.severity == "warn"]
+        if warn_ids:
+            verdicts = verdicts.withColumn(
+                "passed", F.col("passed") | F.col("constraint_id").isin(warn_ids))
 
         summary = df.agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -530,62 +554,48 @@ class SuiteRunner:
             "n_rows",
             f"stack({len(row_checks)}, {stack_args}) as (constraint_id, n_violations)",
         )
-        # advisory (severity='warn') checks never flip a verdict's passed
-        # flag — failures stay visible through n_violations/metric_value
-        warn_ids = [c.constraint_id for c in row_checks if c.severity == "warn"]
-        passed = (F.col("n_violations") == 0) | F.col("constraint_id").isin(
-            warn_ids
-        )
         return long.select(
             "part_key",
             "constraint_id",
             F.col("n_rows").cast("long"),
             F.col("n_violations").cast("long"),
-            passed.alias("passed"),
+            (F.col("n_violations") == 0).alias("passed"),
             F.try_divide(F.col("n_violations"), F.col("n_rows")).cast("double").alias("metric_value"),
         )
 
     # ------------------------------------------------------------------
-    def _run_simple_aggs(self, df, checks: list[Check]) -> dict[str, tuple]:
+    def _run_simple_aggs(self, df, checks: list[Check]) -> DataFrame:
         """Fuse every scalar-aggregate table check (completeness, row count,
         distinct range, quantile range) into ONE agg job — the suite
-        planner's 'fuse same-granularity aggregates' rule (SURVEY.md §4.5)."""
-        aggs = [F.count(F.lit(1)).alias("__n")]
+        planner's 'fuse same-granularity aggregates' rule (SURVEY.md §4.5).
+        Returns one verdict frame stacking a global row per check."""
+        n = F.count(F.lit(1))
+        rows = []
         for c in checks:
-            cid = c.constraint_id
+            p = c.params
+            n_rows = None
             if c.kind == "completeness_min":
-                aggs.append(F.try_divide(F.count(c.column), F.count(F.lit(1))).alias(cid))
+                # no rows: nothing is missing
+                metric = F.coalesce(F.try_divide(F.count(c.column), n), F.lit(1.0))
+                passed, n_rows = metric >= float(p.get("min_ratio", 1.0)), n
             elif c.kind == "row_count_min":
-                aggs.append(F.count(F.lit(1)).cast("double").alias(cid))
+                metric = n.cast("double")
+                passed, n_rows = metric >= int(p["min_rows"]), n
             elif c.kind == "distinct_range":
-                aggs.append(F.approx_count_distinct(c.column).cast("double").alias(cid))
-            elif c.kind == "quantile_range":
-                q = float(c.params.get("q", 0.5))
-                aggs.append(F.expr(f"percentile_approx({c.column}, {q})").cast("double").alias(cid))
-        row = df.agg(*aggs).first()
-        n_rows = int(row["__n"])
-        out = {}
-        for c in checks:
-            cid, p = c.constraint_id, c.params
-            metric = float(row[cid]) if row[cid] is not None else (
-                1.0 if c.kind == "completeness_min" else 0.0)
-            if c.kind == "completeness_min":
-                passed = metric >= float(p.get("min_ratio", 1.0))
-            elif c.kind == "row_count_min":
-                passed = metric >= int(p["min_rows"])
-            elif c.kind == "distinct_range":
-                passed = p.get("min", 0) <= metric <= p.get("max", float("inf"))
+                metric = F.approx_count_distinct(c.column).cast("double")
+                passed = metric.between(p.get("min", 0), p.get("max", float("inf")))
             else:
+                q = F.expr(
+                    f"percentile_approx({c.column}, {float(p.get('q', 0.5))})"
+                ).cast("double")
+                metric = F.coalesce(q, F.lit(0.0))
                 # quantile over an all-NULL column is NULL: no value can
                 # attest the bound — fail
-                passed = (
-                    row[cid] is not None
-                    and p.get("min", float("-inf")) <= metric <= p.get("max", float("inf"))
-                )
-            has_n = c.kind in ("completeness_min", "row_count_min")
-            out[cid] = (GLOBAL_PART, cid, n_rows if has_n else None,
-                        0, bool(passed), metric)
-        return out
+                passed = q.isNotNull() & q.between(
+                    p.get("min", float("-inf")), p.get("max", float("inf")))
+            rows.append(F.struct(*_verdict_cols(c.constraint_id, n_rows, 0,
+                                                passed, metric)))
+        return df.agg(F.array(*rows).alias("v")).select(F.inline("v"))
 
     def _run_schema_check(self, raw_df, check: Check) -> tuple:
         """schema_match (the north rule's 'schema + constraint' engine):
@@ -607,68 +617,59 @@ class SuiteRunner:
                 not mismatches, float(len(mismatches)))
 
     def _run_table_check(self, df, check: Check, catalog, baseline):
-        """Evaluate one table-level check eagerly (each is a tiny aggregate).
-        Returns (verdict_row, extra_violations_df|None)."""
+        """One table-level check as a lazy plan. Returns (verdict frame,
+        extra violations frame | None); the verdict frame holds one global
+        row, or one row per part_key for the per-partition forms."""
         cid, p = check.constraint_id, check.params
-        n_rows = None
-        extra = None
-        if check.kind == "unique":
-            dups = duplicate_keys(df, check.column, int(p.get("salt_buckets", 0))).persist()
-            n_bad_keys = dups.count()
-            # table-level violations are global facts (a dup key can span
-            # partitions) → part_key = __global__
-            extra = dups.select(F.col(check.column).alias("clip_id"),
-                                F.lit(cid).alias("constraint_id"),
-                                F.lit(GLOBAL_PART).alias("part_key"))
-            metric = float(n_bad_keys)
-            passed = n_bad_keys == 0
-            n_viol = n_bad_keys
-        elif check.kind == "referential":
-            if catalog is None:
-                raise ValueError(f"check {cid} needs a reference catalog DataFrame")
-            missing = referential_violations(
-                df.select(check.column), catalog, check.column,
-                p.get("ref_column", check.column),
-                # catalogs at 10^12-row scale cannot broadcast — the knob
-                # switches to sort-merge + AQE skew handling. String-safe:
-                # JSON-authored "false"/"no"/"0" must not coerce to True.
-                broadcast_ref=_param_bool(p.get("broadcast_catalog", True)),
-            ).persist()
-            n_viol = missing.count()
-            extra = missing.select(
+        if check.kind in ("unique", "referential"):
+            if check.kind == "unique":
+                bad = duplicate_keys(df, check.column, int(p.get("salt_buckets", 0)))
+            else:
+                if catalog is None:
+                    raise ValueError(f"check {cid} needs a reference catalog DataFrame")
+                bad = referential_violations(
+                    df.select(check.column), catalog, check.column,
+                    p.get("ref_column", check.column),
+                    # catalogs at 10^12-row scale cannot broadcast — the knob
+                    # switches to sort-merge + AQE skew handling. String-safe:
+                    # JSON-authored "false"/"no"/"0" must not coerce to True.
+                    broadcast_ref=_param_bool(p.get("broadcast_catalog", True)),
+                )
+            # cached: the verdict count and the violation rows read one
+            # evaluation
+            bad = bad.persist()
+            # table-level violations are global facts (a dup key or a
+            # missing reference can span partitions) → part_key = __global__
+            extra = bad.select(
                 F.col(check.column).alias("clip_id"),
                 F.lit(cid).alias("constraint_id"),
                 F.lit(GLOBAL_PART).alias("part_key"),
-            ).dropDuplicates()
-            metric = float(n_viol)
-            passed = n_viol == 0
-        elif check.kind == "completeness_min":
+            )
+            if check.kind == "referential":
+                extra = extra.dropDuplicates()
+            n_bad = F.count(F.lit(1))
+            return bad.agg(*_verdict_cols(cid, None, n_bad, n_bad == 0, n_bad)), extra
+        if check.kind == "completeness_min":
             # only the per-partition form lands here (the global one fuses
             # into _run_simple_aggs): one verdict row per part_key from ONE
             # grouped aggregate — completeness localized the same way
             # per-partition drift is
-            mn = float(p.get("min_ratio", 1.0))
+            r = F.col("r")
             grouped = df.groupBy(
                 part_key_col(self.suite.partition_by).alias("grp")
             ).agg(
                 F.try_divide(F.count(check.column), F.count(F.lit(1))).alias("r"),
                 F.count(F.lit(1)).alias("n"),
             )
-            # verdict rows stay a DataFrame — never collected: at 10^6+
-            # part keys the per-check driver round-trip is the scale
-            # wall; rows reach the driver only at the report sink
-            vdf = grouped.select(
-                F.col("grp").alias("part_key"),
-                F.lit(cid).alias("constraint_id"),
-                F.col("n").cast("long").alias("n_rows"),
-                F.lit(0).cast("long").alias("n_violations"),
-                (F.col("r").isNotNull() & (F.col("r") >= F.lit(mn))).alias("passed"),
-                F.coalesce(F.col("r"), F.lit(0.0)).cast("double").alias("metric_value"),
-            )
-            return vdf, None
-        elif check.kind == "quantile_range":
+            return grouped.select(*_verdict_cols(
+                cid, F.col("n"), 0,
+                r.isNotNull() & (r >= F.lit(float(p.get("min_ratio", 1.0)))),
+                F.coalesce(r, F.lit(0.0)), part_key=F.col("grp"),
+            )), None
+        if check.kind == "quantile_range":
             # method=tdigest only (percentile_approx fuses into
-            # _run_simple_aggs): a two-level digest job of its own
+            # _run_simple_aggs): a two-level digest job of its own, whose
+            # quantile arrives on the driver
             from doc_quality_check_spark.operators.aggregates import (
                 tdigest_quantiles,
             )
@@ -677,15 +678,17 @@ class SuiteRunner:
             val = tdigest_quantiles(
                 df, check.column, [q], int(p.get("delta", 100))
             )[q]
-            metric = float(val) if val is not None else 0.0  # all-null column
-            n_viol = 0
             # all-null column: no quantile exists, the bound cannot be
             # attested — fail rather than compare against None (TypeError)
             passed = (
                 val is not None
                 and p.get("min", float("-inf")) <= val <= p.get("max", float("inf"))
             )
-        elif check.kind == "entropy_range":
+            return _verdict_frame(df.sparkSession, [(
+                GLOBAL_PART, cid, None, 0, bool(passed),
+                float(val) if val is not None else 0.0,
+            )]), None
+        if check.kind == "entropy_range":
             # Shannon entropy (bits) of the column's NON-NULL value
             # distribution — a profiling gate: ~0 flags a degenerate/
             # near-constant column, log2(k) a uniform one. NULLs are a
@@ -699,20 +702,21 @@ class SuiteRunner:
             )
             tot = cnt.agg(F.sum("c").alias("tot"))
             pcol = F.try_divide(F.col("c"), F.col("tot"))
-            val = (
+            h = F.col("h")
+            return (
                 cnt.crossJoin(F.broadcast(tot))
                 .select((-(pcol) * F.log2(pcol)).alias("t"))
                 .agg(F.sum("t").alias("h"))
-                .first()["h"]
-            )
-            metric = float(val) if val is not None else 0.0
-            n_viol = 0
-            # empty input -> no distribution, the bound cannot be attested
-            passed = (
-                val is not None
-                and p.get("min", 0.0) <= val <= p.get("max", float("inf"))
-            )
-        elif check.kind == "payload_neardup":
+                .select(*_verdict_cols(
+                    cid, None, 0,
+                    # empty input -> no distribution, the bound cannot be
+                    # attested
+                    h.isNotNull() & h.between(
+                        p.get("min", 0.0), p.get("max", float("inf"))),
+                    F.coalesce(h, F.lit(0.0)),
+                ))
+            ), None
+        if check.kind == "payload_neardup":
             # near-duplicate-rate bound over the AUDIO payload: spectral
             # fingerprints + pigeonhole Hamming LSH (operators/audio_dedup),
             # clustered by connected components; every cluster member except
@@ -727,11 +731,9 @@ class SuiteRunner:
                 connected_components,
             )
 
-            raw = self._raw_clips
-            id_col = p.get("id_col", "clip_id")
             pairs = audio_neardup_pairs(
-                raw,
-                id_col=id_col,
+                self._raw_clips,
+                id_col=p.get("id_col", "clip_id"),
                 bytes_col=check.column or "bytes",
                 codec_col=p.get("codec_col", "codec"),
                 max_hamming=int(p.get("max_hamming", 7)),
@@ -747,17 +749,21 @@ class SuiteRunner:
             # released by RunResult.unpersist(), not here: the violations
             # union below is lazy and must stay cache-served
             self._run_caches.append(redundant)
-            n_viol = redundant.count()
-            n_rows = df.count()  # cached checked df — cheap recount
             extra = redundant.select(
                 "clip_id",
                 F.lit(cid).alias("constraint_id"),
                 # a near-dup cluster can span partitions → global fact
                 F.lit(GLOBAL_PART).alias("part_key"),
             )
-            metric = float(n_viol) / n_rows if n_rows else 0.0
-            passed = metric <= float(p.get("max_dup_rate", 0.0))
-        elif check.kind == "corr_range":
+            nv = F.col("nv")
+            rate = F.coalesce(F.try_divide(nv, F.col("n")), F.lit(0.0))
+            return df.agg(F.count(F.lit(1)).alias("n")).crossJoin(
+                redundant.agg(F.count(F.lit(1)).alias("nv"))
+            ).select(*_verdict_cols(
+                cid, F.col("n"), nv,
+                rate <= F.lit(float(p.get("max_dup_rate", 0.0))), rate,
+            )), extra
+        if check.kind == "corr_range":
             # Pearson correlation between check.column and params["col2"]
             # (Deequ correlation-analyzer shape) — one grouped aggregate;
             # NULL corr (constant column / n<2) cannot attest the bound
@@ -765,131 +771,81 @@ class SuiteRunner:
                 pearson_corr,
             )
 
-            col2 = p["col2"]
-            row = pearson_corr(
-                df, check.column, col2,
+            corr = pearson_corr(
+                df, check.column, p["col2"],
                 exact_integers=_param_bool(p.get("exact_integers", False)),
-            ).first()
-            val = None if row is None else row["corr"]
-            metric = None if val is None else float(val)
-            n_rows = df.count()
-            n_viol = 0
-            passed = (
-                metric is not None
-                and float(p.get("min", -1.0)) <= metric
-                <= float(p.get("max", 1.0))
             )
-        elif check.kind in ("drift_psi", "drift_ks", "drift_w1", "drift_chi2"):
-            if baseline is None:
-                raise ValueError(f"check {cid} needs a baseline snapshot DataFrame")
-            if _param_bool(p.get("per_partition", False)):
-                # per-partition drift: ONE grouped plan over all partitions
-                # (drift_*_by_group), one verdict row per part_key — the
-                # north rule's per-partition pass/fail applied to drift
-                if not self.suite.partition_by:
-                    raise ValueError(
-                        f"check {cid}: per_partition drift needs suite.partition_by"
-                    )
-                if "part_key" not in baseline.columns:
-                    raise ValueError(
-                        f"check {cid}: per_partition drift needs a baseline with a "
-                        "part_key column — write it with "
-                        "snapshot_histograms(df_with_part_key, cols, group_col='part_key')"
-                    )
-                from doc_quality_check_spark.operators.aggregates import (
-                    drift_chi2_by_group,
-                    drift_ks_by_group,
-                    drift_psi_by_group,
-                    drift_w1_by_group,
-                )
+            stat = df.agg(F.count(F.lit(1)).alias("n")).crossJoin(
+                corr.select(F.col("corr").alias("stat")))
+            return stat.select(*_verdict_cols(
+                cid, F.col("n"), 0,
+                F.col("stat").isNotNull() & F.col("stat").between(
+                    float(p.get("min", -1.0)), float(p.get("max", 1.0))),
+                F.col("stat"),
+            )), None
+        if check.kind in _DRIFT:
+            return self._drift_verdicts(df, check, baseline), None
+        raise ValueError(f"unknown table-level check: {check.kind}")
 
-                grouped = {
-                    "drift_psi": (drift_psi_by_group, "psi", "max_psi", 0.2),
-                    "drift_ks": (drift_ks_by_group, "ks", "max_ks", 0.1),
-                    "drift_w1": (drift_w1_by_group, "w1", "max_w1", 1.0),
-                    "drift_chi2": (drift_chi2_by_group, "cramers_v", "max_v", 0.1),
-                }
-                from doc_quality_check_spark.operators.aggregates import (
-                    bucket_col,
+    def _drift_verdicts(self, df, check: Check, baseline) -> DataFrame:
+        """drift_psi / drift_ks / drift_w1 / drift_chi2 as one verdict
+        frame. With ``per_partition``: one row per current part_key from ONE
+        grouped plan (drift_*_by_group). Else the global statistic, the
+        no-group case of the same implementation: its global aggregate
+        gives exactly one row, also over no rows, and its bucket groupBy
+        sums a grouped (per-partition) snapshot to the flat layout, so one
+        promoted baseline serves both shapes."""
+        cid, p = check.constraint_id, check.params
+        if baseline is None:
+            raise ValueError(f"check {cid} needs a baseline snapshot DataFrame")
+        glob, grouped, stat_col, mx_key, mx_default = _DRIFT[check.kind]
+        # params["bin_width"]: equi-width bins for continuous columns —
+        # keeps the histogram tiny at scale; the baseline must be written
+        # with the same width
+        bucket = bucket_col(check.column, p.get("bin_width")).alias("bucket")
+        base = baseline.filter(F.col("metric") == check.column)
+        part_key = None
+        if _param_bool(p.get("per_partition", False)):
+            if not self.suite.partition_by:
+                raise ValueError(
+                    f"check {cid}: per_partition drift needs suite.partition_by"
                 )
-
-                cur_g = (
-                    df.select(
-                        part_key_col(self.suite.partition_by).alias("grp"),
-                        # params["bin_width"]: equi-width bins for continuous
-                        # columns — keeps the histogram tiny at scale; the
-                        # baseline must be written with the same width
-                        bucket_col(
-                            check.column, p.get("bin_width")
-                        ).alias("bucket"),
-                    )
-                    .groupBy("grp", "bucket")
-                    .agg(F.count("*").alias("count"))
+            if "part_key" not in baseline.columns:
+                raise ValueError(
+                    f"check {cid}: per_partition drift needs a baseline with a "
+                    "part_key column — write it with "
+                    "snapshot_histograms(df_with_part_key, cols, group_col='part_key')"
                 )
-                base_g = baseline.filter(F.col("metric") == check.column).select(
-                    # the current side's part keys go through part_key_col's
-                    # '__null__' sentinel — normalize the baseline the same
-                    # way or NULL partitions never match and spuriously drift
-                    F.coalesce(F.col("part_key").cast("string"),
-                               F.lit(NULL_PART)).alias("grp"),
-                    "bucket",
-                    "count",
-                )
-                fn, stat_col, mx_key, mx_default = grouped[check.kind]
-                mx = float(p.get(mx_key, mx_default))
-                scored = fn(cur_g, base_g, "grp").select(
-                    "grp", F.col(stat_col).alias("stat")
-                )
-                # verdicts for EXACTLY the partitions present in the CURRENT
-                # input: a baseline-only partition must not enter the verdict
-                # table (record_partitions would mark a nonexistent partition
-                # complete, corrupting the resume/incremental skip set), and
-                # a current partition the statistic couldn't score (w1 with
-                # no numeric support drops the group) gets a NULL stat ->
-                # failed verdict, not a silently missing row
-                scored = cur_g.select("grp").distinct().join(scored, "grp", "left")
-                # DataFrame-native verdict rows (same rationale as
-                # per-partition completeness: no driver round-trip per check)
-                vdf = scored.select(
-                    F.col("grp").alias("part_key"),
-                    F.lit(cid).alias("constraint_id"),
-                    F.lit(None).cast("long").alias("n_rows"),
-                    F.lit(0).cast("long").alias("n_violations"),
-                    (F.col("stat").isNotNull() & (F.col("stat") <= F.lit(mx))).alias("passed"),
-                    F.coalesce(F.col("stat"), F.lit(0.0)).cast("double").alias("metric_value"),
-                )
-                return vdf, None
-            cur = histogram(df, check.column, bin_width=p.get("bin_width"))
-            base = baseline.filter(F.col("metric") == check.column)
-            if "part_key" in baseline.columns:
-                # grouped (per-partition) snapshot consumed by a GLOBAL
-                # drift check: collapse to the flat layout — one tiny
-                # aggregate, so one promoted baseline serves both shapes
-                base = base.groupBy("bucket").agg(F.sum("count").alias("count"))
-            else:
-                base = base.select("bucket", "count")
-            if check.kind == "drift_psi":
-                metric = float(drift_psi(cur, base).first()["psi"])
-                passed = metric <= float(p.get("max_psi", 0.2))
-            elif check.kind == "drift_ks":
-                metric = float(drift_ks(cur, base).first()["ks"])
-                passed = metric <= float(p.get("max_ks", 0.1))
-            elif check.kind == "drift_w1":
-                from doc_quality_check_spark.operators.aggregates import drift_w1
-
-                val = drift_w1(cur, base).first()["w1"]
-                # NULL = no numeric bucket support to compare — the bound
-                # cannot be attested, fail (same rule as quantile_range)
-                metric = float(val) if val is not None else 0.0
-                passed = val is not None and val <= float(p.get("max_w1", 1.0))
-            else:
-                from doc_quality_check_spark.operators.aggregates import drift_chi2
-
-                row = drift_chi2(cur, base).first()
-                val = row["cramers_v"]
-                metric = float(val) if val is not None else 0.0
-                passed = val is not None and val <= float(p.get("max_v", 0.1))
-            n_viol = 0
+            cur_g = (
+                df.select(part_key_col(self.suite.partition_by).alias("grp"), bucket)
+                .groupBy("grp", "bucket")
+                .agg(F.count("*").alias("count"))
+            )
+            base_g = base.select(
+                # the current side's part keys go through part_key_col's
+                # '__null__' sentinel — normalize the baseline the same way
+                # or NULL partitions never match and spuriously drift
+                F.coalesce(F.col("part_key").cast("string"),
+                           F.lit(NULL_PART)).alias("grp"),
+                "bucket",
+                "count",
+            )
+            # verdicts for EXACTLY the partitions present in the CURRENT
+            # input: a baseline-only partition must not enter the verdict
+            # table (record_partitions would mark a nonexistent partition
+            # complete, corrupting the resume/incremental skip set), and a
+            # current partition the statistic couldn't score (w1 with no
+            # numeric support drops the group) gets a NULL stat -> failed
+            # verdict, not a silently missing row
+            scored = cur_g.select("grp").distinct().join(
+                grouped(cur_g, base_g, "grp"), "grp", "left")
+            part_key = F.col("grp")
         else:
-            raise ValueError(f"unknown table-level check: {check.kind}")
-        return (GLOBAL_PART, cid, n_rows, int(n_viol), bool(passed), metric), extra
+            scored = glob(df.groupBy(bucket).agg(F.count("*").alias("count")),
+                          base.select("bucket", "count"))
+        stat = F.col(stat_col)
+        return scored.select(*_verdict_cols(
+            cid, None, 0,
+            stat.isNotNull() & (stat <= F.lit(float(p.get(mx_key, mx_default)))),
+            F.coalesce(stat, F.lit(0.0)), part_key=part_key,
+        ))

@@ -814,6 +814,26 @@ def test_job_cli_main_with_baseline_and_catalog(spark, clips_dir, tmp_path):
         jobmod.main(["a", "b", "--baseline"])
 
 
+def test_job_cli_main_default_suite(spark, clips_dir, tmp_path, capsys):
+    """The spark-submit entry without a SUITE.json runs default_suite on a
+    parquet directory and reports the run; argument errors exit with
+    their message before any Spark work."""
+    from doc_quality_check_spark.suite import job as jobmod
+
+    src = str(tmp_path / "clips")
+    load_clips(spark, clips_dir).drop("bytes").limit(300).write.parquet(src)
+    out = str(tmp_path / "cli_default")
+    jobmod.main([src, out, "--no-payload", "--no-resume"])
+    assert "run 1 complete" in capsys.readouterr().out
+    verd = spark.read.parquet(os.path.join(out, "run_000001", "verdicts"))
+    assert verd.filter(F.col("constraint_id") == "clip_id_not_null").count() > 0
+
+    with pytest.raises(SystemExit, match="requires a path argument"):
+        jobmod.main([src, out, "--baseline"])
+    with pytest.raises(SystemExit, match="usage: job.py CLIPS OUT_DIR"):
+        jobmod.main([src])
+
+
 def test_latest_green_baseline_promotion(spark, clips_dir, tmp_path):
     """Managed drift baselines (round-4 verdict order #6): a fully-green
     run auto-promotes its histogram snapshot into the manifest trail;

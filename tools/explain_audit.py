@@ -7,7 +7,8 @@ the physical plans the engine is designed around (SURVEY.md §4):
 - catalog joins BROADCAST (no sort-merge for small dims);
 - non-UDF expression pipelines run inside WholeStageCodegen;
 - a mixed-modality suite decodes each payload in exactly one pass, with no
-  shuffle below a decode node.
+  shuffle below a decode node;
+- a suite's verdict union reads every table-check frame from the cache.
 
 Run: python tools/explain_audit.py   (prints one PASS/FAIL line per audit)
 """
@@ -151,6 +152,56 @@ def run_audits(spark) -> list[tuple[str, bool, str]]:
         else:
             audit("metadata-only default suite: no Python eval node", not nodes,
                   [n[:80] for n in nodes])
+
+    # 5d. table-check verdicts are read from the cache: every table-check
+    #     frame (per-partition completeness, per-partition and global
+    #     drift) is an InMemoryRelation under the verdict union, and the
+    #     union's only shuffle is the partition-verdict groupBy. Walks the
+    #     operator tree, which does not descend into cached plans (the
+    #     plan string prints them).
+    from doc_quality_check_spark.operators.aggregates import snapshot_histograms
+
+    def operators(node):
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        ch = node.children()
+        return [node] + [op for i in range(ch.size())
+                         for op in operators(ch.apply(i))]
+
+    cached_suite = CheckSuite(
+        name="cached_verdicts", partition_by=["part_key"],
+        checks=[
+            Check("id_nn", "not_null", "clip_id"),
+            Check("tr_pp", "completeness_min", "transcript",
+                  {"min_ratio": 0.99, "per_partition": True}),
+            Check("sr_pp", "drift_psi", "sr_hz", {"per_partition": True}),
+            Check("sr_glob", "drift_ks", "sr_hz"),
+        ],
+    )
+    res = SuiteRunner(cached_suite).run(
+        clips, baseline=snapshot_histograms(clips, ["sr_hz"], group_col="part_key"),
+        payload=False)
+    ops = operators(res.verdicts._jdf.queryExecution().executedPlan())
+    res.unpersist()
+
+    def source(op):
+        # the operator under the row-wise wrappers of one union input
+        while (op.nodeName().split(" ")[0] in (
+                "WholeStageCodegen", "InputAdapter", "Project", "ColumnarToRow")
+               and op.children().size() == 1):
+            op = op.children().apply(0)
+        return op.nodeName()
+
+    union = [op for op in ops if op.nodeName() == "Union"]
+    inputs = [source(union[0].children().apply(i))
+              for i in range(union[0].children().size())] if union else []
+    shuffles = [op.toString() for op in ops if op.nodeName() == "Exchange"]
+    # the partition verdicts plus one cached frame per table check
+    audit("table-check verdict frames read from the cache",
+          len(inputs) == 4 and inputs.count("InMemoryTableScan") == 3, inputs)
+    audit("verdict union's only shuffle is the partition-verdict groupBy",
+          len(shuffles) == 1 and "hashpartitioning(" in shuffles[0],
+          [s[:80] for s in shuffles])
 
     # 6. dedup jaccard: the shingle equi-join must be a hash join with
     #    map-side partial aggregation (no cartesian / nested loop)
